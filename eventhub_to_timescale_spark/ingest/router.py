@@ -1,5 +1,5 @@
-"""Publisher routing: ONE pass over the envelope, per-publisher record
-arrays, a single explode.
+"""Publisher routing: one pass over the envelope, per-publisher record
+arrays, one record explode.
 
 Replaces the reference's ``send_to_converter`` dispatch
 (json_converter.py:145-163). Round 1 expressed routing as a 3-way
@@ -14,17 +14,26 @@ single-pass plan evaluates the source exactly once:
       → emon map parse,       guarded by when(publisher = 'emon')
         (both materialized through the Generate barrier — see
         envelope.materialize — so each parses at most once per row)
-      → per-publisher array<struct<of, value, type>>:
+      → per-message Project, once per message: record timestamp,
+        subject, publisher, topic leaf, glow meter struct
+      → per-publisher array<struct<of, value, type>> over those
+        columns:
           glow  = the 11 declared leaves (glow.glow_fields)
           homie = one element, measurement_of from the topic
           emon  = transform(map_entries(kv)) minus the 'time' key
-      → concat → array-level null-value filter → ONE explode.
+      → concat → array-level null-value filter
+      → record explode (Generate); a null record timestamp nulls the
+        array, so the message yields no rows.
 
-Row-level columns (timestamp, subject) are when/otherwise over the
-same scan; per-branch guards reproduce each converter's filters. At
-100 TB this is one linear stage with no shuffle and no repeated scan;
-``route_to_records_union`` keeps the naive plan for differential
-testing (tests/test_router_single_pass.py asserts identical output).
+Nothing above the record explode re-evaluates a per-message
+expression: the Project above it runs once per record (2-3 per
+message), and a Filter on the timestamp would be pushed below the
+per-message Project with the parse inlined (tests/
+test_ingest_plan_shape.py pins both). Per-branch guards reproduce each
+converter's filters. At 100 TB this is one linear stage with no
+repeated scan; ``route_to_records_union`` keeps the naive plan for
+differential testing (tests/test_router_single_pass.py asserts
+identical output).
 """
 
 from __future__ import annotations
@@ -137,13 +146,12 @@ def route_to_records(
     meter = F.when(
         subject_last == "electricitymeter", F.col("gp.electricitymeter")
     ).otherwise(F.col("gp.gasmeter"))
-    homie_of = topic_part(F.col("topic"), -1)
 
     # record timestamp source differs per publisher: glow = payload
     # meter.timestamp (glow.py:17), homie = envelope timestamp
     # (homie.py:33), emon = payload 'time' key (emon.py
     # extract_timestamp), dynamic fallback = envelope timestamp;
-    # null → row dropped, like each converter
+    # null → message dropped, like each converter
     rec_ts = (
         F.when(pub == "glow", parse_timestamp_any(meter["timestamp"]))
         .when(pub == "emon", parse_timestamp_any(F.col("kv")["time"]))
@@ -153,32 +161,50 @@ def route_to_records(
         subject_last
     )
 
+    # Every per-message expression is evaluated ONCE, here, in the
+    # Project below the record Generate. The Generate's generator runs
+    # interpreted (filter/transform are CodegenFallback), so each
+    # reference to an inline expression there would re-evaluate it —
+    # the meter pick alone once per glow leaf — and the Project
+    # above it runs once per exploded record.
+    msgs = base.select(
+        rec_ts.alias("timestamp"),
+        subject.alias("measurement_subject"),
+        pub.alias("measurement_publisher"),
+        "correlation_id",
+        "payload",
+        "kv",
+        subject_last.alias("leaf"),
+        meter.alias("meter"),
+    )
+    pub = F.col("measurement_publisher")
+    leaf = F.col("leaf")
+
     glow_arr = F.when(
-        (pub == "glow") & has_payload & subject_last.isin(*GLOW_SUBJECTS),
+        (pub == "glow") & has_payload & leaf.isin(*GLOW_SUBJECTS),
         F.array(
             *[
                 _rec(F.lit(name), value, F.lit(tag))
-                for name, value, tag in glow_fields(meter, subject_last)
+                for name, value, tag in glow_fields(F.col("meter"), leaf)
             ]
         ),
     )
+    # homie: the record timestamp IS the envelope's, so the null-
+    # timestamp guard below covers homie's envelope-timestamp check
     homie_arr = F.when(
-        (pub == "homie")
-        & has_payload
-        & F.col("timestamp").isNotNull()
-        & homie_of.isin(*HOMIE_EVENTS_OF_INTEREST),
+        (pub == "homie") & has_payload & leaf.isin(*HOMIE_EVENTS_OF_INTEREST),
         F.array(
             _rec(
-                homie_of,
+                leaf,
                 F.col("payload"),
-                F.when(
-                    homie_of.isin(*_STRING_MEASURES), F.lit(TYPE_STRING)
-                ).otherwise(F.lit(TYPE_NUMBER)),
+                F.when(leaf.isin(*_STRING_MEASURES), F.lit(TYPE_STRING)).otherwise(
+                    F.lit(TYPE_NUMBER)
+                ),
             )
         ),
     )
     emon_arr = F.when(
-        (pub == "emon") & has_payload & subject_last.isin(*EMON_SUBJECTS),
+        (pub == "emon") & has_payload & leaf.isin(*EMON_SUBJECTS),
         F.filter(
             F.transform(
                 F.map_entries(F.col("kv")),
@@ -197,13 +223,11 @@ def route_to_records(
         )
         arrays.append(
             F.when(
-                ~pub.isin(*KNOWN_PUBLISHERS)
-                & has_payload
-                & F.col("timestamp").isNotNull(),
+                ~pub.isin(*KNOWN_PUBLISHERS) & has_payload,
                 F.transform(
                     leaves,
-                    lambda leaf: _rec(
-                        leaf["k"], leaf["js"], infer_type_tag(leaf["js"])
+                    lambda node: _rec(
+                        node["k"], node["js"], infer_type_tag(node["js"])
                     ),
                 ),
             )
@@ -215,24 +239,23 @@ def route_to_records(
         lambda r: r["measurement_value"].isNotNull(),
     )
 
-    return (
-        base.select(
-            rec_ts.alias("timestamp"),
-            subject.alias("measurement_subject"),
-            pub.alias("measurement_publisher"),
-            F.col("correlation_id"),
-            F.explode(records).alias("rec"),
-        )
-        .filter(F.col("timestamp").isNotNull())
-        .select(
-            "timestamp",
-            "measurement_subject",
-            "measurement_publisher",
-            F.col("rec.measurement_of").alias("measurement_of"),
-            F.col("rec.measurement_value").alias("measurement_value"),
-            F.col("rec.measurement_data_type").alias("measurement_data_type"),
-            "correlation_id",
-        )
+    # null-timestamp messages are dropped AT the explode (a null array
+    # explodes to no rows): a Filter on the timestamp would be pushed
+    # below the Project with the alias inlined, re-parsing it
+    return msgs.select(
+        "timestamp",
+        "measurement_subject",
+        "measurement_publisher",
+        "correlation_id",
+        F.explode(F.when(F.col("timestamp").isNotNull(), records)).alias("rec"),
+    ).select(
+        "timestamp",
+        "measurement_subject",
+        "measurement_publisher",
+        F.col("rec.measurement_of").alias("measurement_of"),
+        F.col("rec.measurement_value").alias("measurement_value"),
+        F.col("rec.measurement_data_type").alias("measurement_data_type"),
+        "correlation_id",
     )
 
 

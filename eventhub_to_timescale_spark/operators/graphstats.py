@@ -135,12 +135,10 @@ def graph_triangle_stats(
     # empty graph, exactly as the bare SUM always was).
     totals = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
-        (F.coalesce(F.sum("deg"), F.lit(0)) / F.lit(2))
-        .cast("long")
-        .alias("n_edges"),
-        (F.sum(F.col("deg") * (F.col("deg") - 1)) / F.lit(2))
-        .cast("long")
-        .alias("n_wedges"),
+        # integer `div` (bigint in, bigint out): exact past 2^53,
+        # like the oracle's `//`
+        F.expr("coalesce(sum(deg), 0) div 2").alias("n_edges"),
+        F.expr("sum(deg * (deg - 1)) div 2").alias("n_wedges"),
     )
     return (
         totals

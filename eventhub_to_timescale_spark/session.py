@@ -18,6 +18,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _usable_cores() -> int:
+    """Cores in this process's CPU affinity mask (a container pinned to
+    a few cores of a large host sees only those); the host's count
+    where the platform has no affinity call."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "eventhub-to-timescale-spark",
     master: str | None = None,
@@ -27,11 +36,13 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     ``master``/``shuffle_partitions`` default from env
-    (``SPARK_GRAFT_CPUS``) so the same entrypoints work in tests
+    (``SPARK_GRAFT_CPUS``, else the cores this process may run on, as
+    ``nproc`` counts them — more task slots than cores only
+    oversubscribes them) so the same entrypoints work in tests
     (local[N]) and on a cluster (where ``master`` is left to
     spark-submit).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cores())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

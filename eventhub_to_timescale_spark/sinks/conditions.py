@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from eventhub_to_timescale_spark.ingest.envelope import materialize
 from eventhub_to_timescale_spark.schema import (
     TYPE_BOOLEAN,
     TYPE_GEOGRAPHY,
@@ -62,15 +63,22 @@ def records_to_conditions(records: DataFrame, with_unique_id: bool = True) -> Da
     bool_val = F.when(
         F.lower(v).isin("true", "false"), F.lower(v) == "true"
     )
-    out = records.select(
-        F.col("timestamp"),
-        "measurement_subject",
-        "measurement_publisher",
-        "measurement_of",
+    # the typed values are materialized (one-row Generate) so the
+    # validity filter reads them as struct fields: over a Project, the
+    # filter would be pushed below it with every alias inlined,
+    # re-running each cast
+    typed = F.struct(
         F.when(t == TYPE_NUMBER, v.cast("double")).alias("measurement_number"),
         F.when(t == TYPE_STRING, v).alias("measurement_string"),
         F.when(t == TYPE_BOOLEAN, bool_val).alias("measurement_bool"),
         F.when(t == TYPE_GEOGRAPHY, _geo_to_wkt(v)).alias("measurement_location"),
+    )
+    out = materialize(records, typed, "typed").select(
+        F.col("timestamp"),
+        "measurement_subject",
+        "measurement_publisher",
+        "measurement_of",
+        "typed.*",
         "correlation_id",
     )
     # reject: typed value failed coercion (reference raises per record,

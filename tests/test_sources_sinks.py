@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from eventhub_to_timescale_spark.sinks.messages import (
     distinct_correlation_ids,
     records_to_messages,
@@ -181,3 +183,44 @@ def test_kafka_option_wiring():
     # embedded quotes in the connection string must be JAAS-escaped
     assert '\\"k\\"' in eh["kafka.sasl.jaas.config"]
     assert eh["kafka.sasl.jaas.config"].rstrip().endswith(";")
+
+
+def test_kafka_reader_splits_to_every_slot():
+    """``read_kafka_stream`` asks the connector for at least one input
+    partition per task slot (``minPartitions``, split offset ranges —
+    no shuffle), unless the caller sets its own. A recording stand-in
+    for ``spark.readStream`` captures the options, since the connector
+    jar is absent here."""
+    from types import SimpleNamespace
+
+    from eventhub_to_timescale_spark.streaming.pipeline import read_kafka_stream
+
+    class Recorder:
+        def __init__(self):
+            self.opts = {}
+
+        def format(self, name):
+            assert name == "kafka"
+            return self
+
+        def option(self, k, v):
+            self.opts[k] = v
+            return self
+
+        def load(self):
+            raise RuntimeError("no connector")
+
+    def read(options):
+        rec = Recorder()
+        fake = SimpleNamespace(
+            readStream=rec, sparkContext=SimpleNamespace(defaultParallelism=6)
+        )
+        with pytest.raises(RuntimeError, match="Kafka connector unavailable"):
+            read_kafka_stream(fake, options)
+        return rec.opts
+
+    assert read({"subscribe": "telemetry"}) == {
+        "minPartitions": "6",
+        "subscribe": "telemetry",
+    }
+    assert read({"minPartitions": "64"})["minPartitions"] == "64"

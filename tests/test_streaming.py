@@ -63,6 +63,59 @@ def test_stream_full_pipeline(spark, tmpdir):
     assert by_pub == {"glow": 3, "homie": 1, "emon": 1}
 
 
+def test_stream_single_file_batch_runs_on_every_slot(spark, tmpdir):
+    """A one-file trigger reads as ONE input split; ``read_raw_stream``
+    spreads its raw strings round-robin over ``defaultParallelism``
+    partitions (N at local[N]), so the micro-batch runs in N tasks —
+    and stores exactly the rows the un-repartitioned batch plan
+    produces."""
+    from collections import Counter
+
+    from eventhub_to_timescale_spark.ingest.envelope import parse_envelope
+    from eventhub_to_timescale_spark.ingest.router import route_to_records
+    from eventhub_to_timescale_spark.sinks.conditions import records_to_conditions
+    from eventhub_to_timescale_spark.streaming.pipeline import (
+        read_raw_stream,
+        stream_to_conditions,
+    )
+    from tests.test_router_single_pass import MESSAGES
+
+    messages = MESSAGES + [
+        make_envelope("emon/emonTx4", {"time": 1706777400 + i, "P1": i, "T1": 0.5 * i})
+        for i in range(30)
+    ]
+    raw_path = _write_raw(spark, tmpdir, messages)
+    assert spark.read.parquet(raw_path).rdd.getNumPartitions() == 1
+
+    seen = {}
+
+    def capture(df, batch_id):
+        seen["partitions"] = df.rdd.getNumPartitions()
+        seen["rows"] = df.collect()
+
+    q = (
+        stream_to_conditions(read_raw_stream(spark, raw_path), deterministic_ids=True)
+        .writeStream.foreachBatch(capture)
+        .option("checkpointLocation", f"{tmpdir}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1
+    assert seen["partitions"] == n
+    want = records_to_conditions(
+        route_to_records(
+            parse_envelope(spark.read.parquet(raw_path), deterministic_ids=True)
+        ),
+        with_unique_id=False,
+    ).collect()
+    # 21 records from MESSAGES (test_router_single_pass) + 2 per emon
+    assert len(want) == 21 + 60
+    assert Counter(map(tuple, seen["rows"])) == Counter(map(tuple, want))
+
+
 def test_stream_idempotent_redelivery(spark, tmpdir):
     """Re-running the same input with a FRESH checkpoint (≙ redelivery
     of every batch) must not duplicate rows in the sink."""
