@@ -6,10 +6,11 @@ Reproduces the reference's ``recursively_deserialize``
 (timeseries.py:43-98) pair as ONE depth-unrolled JVM expression tree:
 
 - objects recurse; every non-object value is a leaf record whose
-  ``measurement_of`` is the LEAF key — optionally prefixed with a
-  constant ``prefix + '_'`` exactly like the reference's
-  ``measurement_of_prefix`` (the reference does NOT accumulate the
-  path; sibling subtrees sharing a leaf key collide there too).
+  ``measurement_of`` is the LEAF key — in ``flatten_payload_dynamic``
+  optionally prefixed with a constant ``prefix + '_'`` exactly like
+  the reference's ``measurement_of_prefix`` (the reference does NOT
+  accumulate the path; sibling subtrees sharing a leaf key collide
+  there too).
 - ``ignore_keys`` prune whole subtrees (reference: ignored keys are
   "also not recursed").
 - a leaf STRING that itself parses as JSON behaves as its parsed
@@ -51,6 +52,10 @@ An earlier per-child ``get_json_object``-path walk parsed a K-child
 node K+1 times and could not address keys containing a single quote;
 this one has no key-character restrictions and benches neutral at
 sf0.1 (the fan-out, not the parse, dominates there).
+
+``leaves_col`` is the tree; envelopes reach it through the router's
+``dynamic_fallback`` branch, which ``dynamic_to_records`` runs over
+one publisher's messages.
 """
 
 from __future__ import annotations
@@ -59,6 +64,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from eventhub_to_timescale_spark.functions.typeinfer import infer_type_tag
+from eventhub_to_timescale_spark.ingest.envelope import publisher_is
 
 _MAP = "map<string,string>"
 
@@ -189,51 +195,20 @@ def flatten_payload_dynamic(
 def dynamic_to_records(
     envelope_df: DataFrame,
     publisher: str,
-    subjects: tuple[str, ...] | None = None,
     ignore_keys: tuple[str, ...] = (),
-    prefix: str | None = None,
     max_depth: int = 6,
 ) -> DataFrame:
-    """Generic converter for an undeclared publisher: envelope → atomic
-    records by flattening the payload at any depth. Subject = last
-    topic segment (optionally filtered to ``subjects``), record
-    timestamp = envelope timestamp — the shape a brand-new sensor
-    onboards with before anyone writes a declared-struct converter."""
-    from eventhub_to_timescale_spark.functions.scalars import (
-        parse_timestamp_any,
-        topic_subject,
-    )
-    from eventhub_to_timescale_spark.ingest.envelope import publisher_is
+    """Envelope → atomic records for an undeclared publisher: the
+    router's ``dynamic_fallback`` branch over ``publisher``'s messages.
+    Subject = last topic segment, record timestamp = envelope timestamp
+    (none → no records). A declared publisher keeps its own rules."""
+    from eventhub_to_timescale_spark.ingest.router import route_to_records
 
-    df = (
-        publisher_is(envelope_df, publisher)
-        .filter(F.col("payload").isNotNull() & F.col("timestamp").isNotNull())
-        .withColumn("measurement_subject", topic_subject(F.col("topic")))
-    )
-    if subjects:
-        df = df.filter(F.col("measurement_subject").isin(*subjects))
-    df = (
-        df.withColumn("rec_ts", parse_timestamp_any(F.col("timestamp")))
-        .filter(F.col("rec_ts").isNotNull())
-        .select(
-            F.col("rec_ts").alias("timestamp"),
-            "measurement_subject",
-            F.lower(F.col("publisher")).alias("measurement_publisher"),
-            "correlation_id",
-            "payload",
-        )
-    )
-    flat = flatten_payload_dynamic(
-        df, "payload", max_depth=max_depth, ignore_keys=ignore_keys, prefix=prefix
-    )
-    return flat.select(
-        "timestamp",
-        "measurement_subject",
-        "measurement_publisher",
-        "measurement_of",
-        "measurement_value",
-        "measurement_data_type",
-        "correlation_id",
+    return route_to_records(
+        publisher_is(envelope_df, publisher),
+        dynamic_fallback=True,
+        dynamic_max_depth=max_depth,
+        dynamic_ignore_keys=ignore_keys,
     )
 
 

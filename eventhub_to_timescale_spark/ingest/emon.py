@@ -1,91 +1,39 @@
-"""emonTx4 energy-monitor converter (reference emon.py:14-48).
+"""emonTx4 energy-monitor rules (reference emon.py:14-48).
+
+``ingest.router`` applies them; ``emon_to_records`` is that router
+over emon's own messages.
 
 Semantics reproduced:
 - publisher must be ``emon``; subject = last topic segment, kept only
-  for ``emonTx4``.
+  for ``EMON_SUBJECTS``.
 - payload is double-encoded *flat* JSON; record timestamp comes from
   its required ``time`` key (epoch seconds — emon.py extract_timestamp;
-  missing/invalid → row dropped, the reference raises ValueError).
+  missing/invalid → message dropped, the reference raises ValueError).
 - every remaining key becomes one record, no prefix, ``time`` ignored.
 
 This converter exercises the engine's **dynamic-payload path**: the
-payload is parsed as ``map<string,string>`` and exploded via
-``map_entries`` with per-leaf type inference (``infer_type_tag``) —
+payload is parsed as ``map<string,string>`` and its ``map_entries``
+become records with per-leaf type inference (``infer_type_tag``) —
 the Spark-first equivalent of the reference's recursive flatten over
 unknown keys (timeseries.py:43-98) for flat payloads. Glow takes the
 declared-struct path; together they cover both SURVEY §1.3 strategies.
 
-Caveat (measured): the map parse re-renders JSON numbers through
-double, so large values arrive in scientific notation ("1.7E9") —
-numerically lossless (shortest-round-trip), and both the epoch parser
-and the type-inference regex accept the form. The alternative
-``parse_json``/``variant_get`` path preserves exact leaf text but
-benches ~2× slower; flip ``USE_VARIANT_PATH`` if byte-faithful
-``measurement_value`` matters more than throughput.
+The map parse re-renders JSON numbers through double: large values
+arrive as "1.7E9", numerically lossless, and both the epoch parser and
+the type-inference regex accept the form.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from eventhub_to_timescale_spark.functions.scalars import (
-    parse_timestamp_any,
-    topic_subject,
-)
-from eventhub_to_timescale_spark.functions.typeinfer import infer_type_tag
-from eventhub_to_timescale_spark.ingest.envelope import materialize, publisher_is
+from eventhub_to_timescale_spark.ingest.envelope import publisher_is
 
 EMON_SUBJECTS = ("emonTx4",)
 
-USE_VARIANT_PATH = False
-
-
-def _payload_map(df: DataFrame) -> DataFrame:
-    if USE_VARIANT_PATH:
-        # byte-faithful leaf text; parse the variant ONCE per row
-        return df.withColumn("pj", F.expr("parse_json(payload)")).withColumn(
-            "kv",
-            F.map_from_entries(
-                F.expr(
-                    "transform(json_object_keys(payload), k -> "
-                    "struct(k, cast(variant_get(pj, "
-                    "'$[\"' || k || '\"]', 'string') as string)))"
-                )
-            ),
-        )
-    return materialize(df, F.from_json(F.col("payload"), "map<string,string>"), "kv")
-
 
 def emon_to_records(envelope_df: DataFrame) -> DataFrame:
-    df = (
-        publisher_is(envelope_df, "emon")
-        .filter(F.col("payload").isNotNull())
-        .withColumn("measurement_subject", topic_subject(F.col("topic")))
-        .filter(F.col("measurement_subject").isin(*EMON_SUBJECTS))
-    )
-    df = (
-        _payload_map(df)
-        .withColumn("rec_ts", parse_timestamp_any(F.col("kv")["time"]))
-        .filter(F.col("rec_ts").isNotNull())
-    )
-    out = (
-        df.select(
-            F.col("rec_ts").alias("timestamp"),
-            "measurement_subject",
-            F.lower(F.col("publisher")).alias("measurement_publisher"),
-            "correlation_id",
-            F.explode(F.map_entries(F.col("kv"))).alias("e"),
-        )
-        .filter(F.col("e.key") != "time")
-        .select(
-            "timestamp",
-            "measurement_subject",
-            "measurement_publisher",
-            F.col("e.key").alias("measurement_of"),
-            F.col("e.value").alias("measurement_value"),
-            infer_type_tag(F.col("e.value")).alias("measurement_data_type"),
-            "correlation_id",
-        )
-    )
-    return out.filter(F.col("measurement_value").isNotNull())
+    """Envelope rows → atomic records for the emon publisher."""
+    from eventhub_to_timescale_spark.ingest.router import route_to_records
+
+    return route_to_records(publisher_is(envelope_df, "emon"))

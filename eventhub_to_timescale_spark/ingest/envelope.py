@@ -109,9 +109,10 @@ def envelope_ok(df: DataFrame) -> DataFrame:
 
 
 def publisher_is(df: DataFrame, expected: str) -> DataFrame:
-    """Publisher guard as a filter (reference helpers.py:24-41 raises
-    ValueError; a distributed plan drops non-matching rows — routing
-    ensures each converter only sees its own)."""
+    """Rows whose publisher is ``expected`` (case-insensitive) — the
+    reference's publisher guard (helpers.py:24-41 raises ValueError)
+    as a filter. Each per-publisher ``*_to_records`` entry is the
+    router over ``publisher_is(envelopes, <name>)``."""
     return df.filter(F.lower(F.col("publisher")) == expected.lower())
 
 
@@ -121,19 +122,18 @@ def unpivot_fields(
     timestamp: Column,
     subject: Column,
     publisher: Column,
-    correlation_id: Column | None = None,
-    drop_null_values: bool = True,
+    correlation_id: Column,
 ) -> DataFrame:
-    """The central fan-out (reference ``create_record_recursive``,
+    """The BMW fan-out (reference ``create_record_recursive``,
     timeseries.py:43-98) expressed Spark-first as **projection +
     unpivot**, not a row-at-a-time recursion:
 
     ``fields`` is a list of (measurement_of, value_column, type_tag);
     each input row explodes into one atomic record per non-null field.
     ``explode(array(struct(...)))`` keeps everything in whole-stage
-    codegen; absent (null) fields are dropped after the explode, which
-    mirrors the reference's skip-absent-keys behavior
-    (bmw_to_timescale.py:167-190).
+    codegen; absent (null) fields and rows without a timestamp are
+    dropped after the explode, which mirrors the reference's
+    skip-absent-keys behavior (bmw_to_timescale.py:167-190).
     """
     structs = [
         F.struct(
@@ -148,9 +148,7 @@ def unpivot_fields(
         timestamp.alias("timestamp"),
         subject.alias("measurement_subject"),
         publisher.alias("measurement_publisher"),
-        (correlation_id if correlation_id is not None else F.col("correlation_id")).alias(
-            "correlation_id"
-        ),
+        correlation_id.alias("correlation_id"),
         rec,
     ).select(
         "timestamp",
@@ -161,6 +159,6 @@ def unpivot_fields(
         F.col("rec.measurement_data_type").alias("measurement_data_type"),
         "correlation_id",
     )
-    if drop_null_values:
-        out = out.filter(F.col("measurement_value").isNotNull())
-    return out.filter(F.col("timestamp").isNotNull())
+    return out.filter(
+        F.col("measurement_value").isNotNull() & F.col("timestamp").isNotNull()
+    )

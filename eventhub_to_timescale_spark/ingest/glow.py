@@ -1,22 +1,27 @@
-"""Glow/Hildebrand smart-meter converter (reference glow.py:70-91).
+"""Glow/Hildebrand smart-meter rules (reference glow.py:70-91).
+
+``ingest.router`` applies them; ``glow_to_records`` is that router
+over glow's own messages.
 
 Semantics reproduced:
-- publisher must be ``glow`` (case-insensitive) — as a filter.
-- subject = last topic segment, kept only for
-  ``electricitymeter``/``gasmeter`` (glow.py allowlist).
-- payload is double-encoded JSON → second ``from_json`` with a
-  *declared* struct (SURVEY §1.3: per-publisher declared payload
-  structs replace the reference's fully-dynamic recursive flatten —
-  Glow payload shapes are stable).
+- publisher must be ``glow`` (case-insensitive).
+- subject = last topic segment, kept only for ``GLOW_SUBJECTS``
+  (glow.py allowlist).
+- payload is double-encoded JSON → second ``from_json`` with the
+  *declared* ``GLOW_PAYLOAD_SCHEMA`` (SURVEY §1.3: per-publisher
+  declared payload structs replace the reference's fully-dynamic
+  recursive flatten — Glow payload shapes are stable).
 - record timestamp comes from ``payload[subject].timestamp``
-  (glow.py:17), NOT the envelope.
-- fan-out: ``energy.import.*`` flattened with prefix ``import`` (the
-  nested ``price`` dict recurses to the same prefix level —
-  timeseries.py:88-92), plus ``power.*`` with prefix ``power`` for
-  electricitymeter only (glow.py:44-55).
+  (glow.py:17), NOT the envelope; a payload lacking its topic's
+  subject key has none, so the message yields no records (reference
+  returns [] there, glow.py:30-31).
+- fan-out (``glow_fields``): ``energy.import.*`` flattened with prefix
+  ``import`` (the nested ``price`` dict recurses to the same prefix
+  level — timeseries.py:88-92), plus ``power.*`` with prefix
+  ``power`` for electricitymeter only (glow.py:44-55).
 - ignore keys (glow.py get_ignore_keys): units, mpan, mprn, supplier,
   dayweekmonthvolunits, cumulativevolunits — expressed by simply not
-  selecting those columns.
+  declaring those fields.
 """
 
 from __future__ import annotations
@@ -25,15 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from eventhub_to_timescale_spark.functions.scalars import (
-    parse_timestamp_any,
-    topic_subject,
-)
-from eventhub_to_timescale_spark.ingest.envelope import (
-    materialize,
-    publisher_is,
-    unpivot_fields,
-)
+from eventhub_to_timescale_spark.ingest.envelope import publisher_is
 from eventhub_to_timescale_spark.schema import TYPE_NUMBER
 
 GLOW_SUBJECTS = ("electricitymeter", "gasmeter")
@@ -97,8 +94,7 @@ GLOW_PAYLOAD_SCHEMA = T.StructType(
 
 def glow_fields(meter, subject):
     """The glow fan-out as (measurement_of, value, type_tag) tuples over
-    a ``meter`` struct column — shared by ``glow_to_records`` and the
-    single-pass router so the leaf list can't diverge."""
+    a ``meter`` struct column, in record order."""
     imp = meter["energy"]["import"]
     return [
         ("import_cumulative", imp["cumulative"], TYPE_NUMBER),
@@ -121,36 +117,7 @@ def glow_fields(meter, subject):
 
 
 def glow_to_records(envelope_df: DataFrame) -> DataFrame:
-    """Envelope rows → canonical atomic records for the glow publisher."""
-    subject = topic_subject(F.col("topic"))
-    base = (
-        publisher_is(envelope_df, "glow")
-        .filter(F.col("payload").isNotNull())
-        .withColumn("measurement_subject", subject)
-        .filter(F.col("measurement_subject").isin(*GLOW_SUBJECTS))
-    )
-    # materialize the payload parse (once per row — see
-    # envelope.materialize), then pick the struct matching the topic
-    # subject; a payload lacking its subject key yields nulls → rows
-    # dropped by the timestamp filter (reference returns [] there,
-    # glow.py:30-31)
-    df = (
-        materialize(base, F.from_json(F.col("payload"), GLOW_PAYLOAD_SCHEMA), "p")
-        .withColumn(
-            "meter",
-            F.when(
-                F.col("measurement_subject") == "electricitymeter",
-                F.col("p.electricitymeter"),
-            ).otherwise(F.col("p.gasmeter")),
-        )
-        .withColumn("rec_ts", parse_timestamp_any(F.col("meter.timestamp")))
-    )
+    """Envelope rows → atomic records for the glow publisher."""
+    from eventhub_to_timescale_spark.ingest.router import route_to_records
 
-    fields = glow_fields(F.col("meter"), F.col("measurement_subject"))
-    return unpivot_fields(
-        df,
-        fields,
-        timestamp=F.col("rec_ts"),
-        subject=F.col("measurement_subject"),
-        publisher=F.lower(F.col("publisher")),
-    )
+    return route_to_records(publisher_is(envelope_df, "glow"))

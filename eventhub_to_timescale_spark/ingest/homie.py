@@ -1,13 +1,16 @@
-"""Homie/Hubitat home-automation converter (reference homie.py:13-42).
+"""Homie/Hubitat home-automation rules (reference homie.py:13-42).
+
+``ingest.router`` applies them; ``homie_to_records`` is that router
+over homie's own messages.
 
 Semantics reproduced:
 - publisher must be ``homie``; body must have ``payload`` AND
   ``timestamp`` (homie validates the extra key, homie.py:26).
 - measurement_of = last topic segment, subject = second-to-last
-  (homie.py:55-66); only of ∈ {measure-temperature, heating-setpoint,
-  state, mode, thermostat-setpoint} kept.
+  (homie.py:55-66); only of ∈ ``HOMIE_EVENTS_OF_INTEREST`` kept.
 - value = the raw payload string, NOT JSON-decoded (homie.py:37).
-- type: STRING for state/mode, NUMBER otherwise (homie.py:69-77).
+- type: STRING for ``_STRING_MEASURES``, NUMBER otherwise
+  (homie.py:69-77).
 - record timestamp from the ENVELOPE timestamp (homie.py:33).
 - exactly one record per message (no fan-out).
 """
@@ -15,14 +18,8 @@ Semantics reproduced:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from eventhub_to_timescale_spark.functions.scalars import (
-    parse_timestamp_any,
-    topic_part,
-)
 from eventhub_to_timescale_spark.ingest.envelope import publisher_is
-from eventhub_to_timescale_spark.schema import TYPE_NUMBER, TYPE_STRING
 
 HOMIE_EVENTS_OF_INTEREST = (
     "measure-temperature",
@@ -36,33 +33,10 @@ _STRING_MEASURES = ("state", "mode")
 
 
 def homie_to_records(envelope_df: DataFrame) -> DataFrame:
-    df = (
-        publisher_is(envelope_df, "homie")
-        .filter(F.col("payload").isNotNull() & F.col("timestamp").isNotNull())
-        .withColumn("measurement_of", topic_part(F.col("topic"), -1))
-        .filter(F.col("measurement_of").isin(*HOMIE_EVENTS_OF_INTEREST))
-        .withColumn("measurement_subject", topic_part(F.col("topic"), -2))
-        .withColumn("rec_ts", parse_timestamp_any(F.col("timestamp")))
-    )
-    # single record per message: carry measurement_of/type through the
-    # same canonical projection (unpivot of one field list would lose
-    # the per-row measurement_of, so project directly)
-    out = df.select(
-        F.col("rec_ts").alias("timestamp"),
-        "measurement_subject",
-        F.lower(F.col("publisher")).alias("measurement_publisher"),
-        "measurement_of",
-        F.col("payload").cast("string").alias("measurement_value"),
-        F.when(
-            F.col("measurement_of").isin(*_STRING_MEASURES), F.lit(TYPE_STRING)
-        )
-        .otherwise(F.lit(TYPE_NUMBER))
-        .alias("measurement_data_type"),
-        "correlation_id",
-    )
-    return out.filter(
-        F.col("timestamp").isNotNull() & F.col("measurement_value").isNotNull()
-    )
+    """Envelope rows → atomic records for the homie publisher."""
+    from eventhub_to_timescale_spark.ingest.router import route_to_records
+
+    return route_to_records(publisher_is(envelope_df, "homie"))
 
 
 __all__ = ["homie_to_records", "HOMIE_EVENTS_OF_INTEREST"]

@@ -2,12 +2,13 @@
 arrays, one record explode.
 
 Replaces the reference's ``send_to_converter`` dispatch
-(json_converter.py:145-163). Round 1 expressed routing as a 3-way
-``unionByName`` of the converter DataFrames — semantically right, but
-Catalyst does not share common subtrees across union branches, so the
-raw scan and the envelope ``from_json`` executed once per branch (a 3×
-scan tax measured as the worst bench entry, 4.6 s warm at sf0.1). The
-single-pass plan evaluates the source exactly once:
+(json_converter.py:145-163). It is the one ingest implementation: the
+publisher modules declare their rules, and every ``*_to_records``
+entry is this router over its own publisher's messages. A union of
+per-publisher plans scans the raw source and runs the envelope
+``from_json`` once per branch (Catalyst shares no subtree across
+union branches: a 3× scan tax, 4.6 s warm at sf0.1). The single-pass
+plan evaluates the source exactly once:
 
     envelope rows (scanned once)
       → glow payload parse,   guarded by when(publisher = 'glow')
@@ -29,11 +30,10 @@ Nothing above the record explode re-evaluates a per-message
 expression: the Project above it runs once per record (2-3 per
 message), and a Filter on the timestamp would be pushed below the
 per-message Project with the parse inlined (tests/
-test_ingest_plan_shape.py pins both). Per-branch guards reproduce each
-converter's filters. At 100 TB this is one linear stage with no
-repeated scan; ``route_to_records_union`` keeps the naive plan for
-differential testing (tests/test_router_single_pass.py asserts
-identical output).
+test_ingest_plan_shape.py pins both). The per-branch guards are each
+publisher's rules. At 100 TB this is one linear stage with no
+repeated scan. tests/test_router_single_pass.py checks it against
+``route_to_records_union``, the union of single-publisher routes.
 """
 
 from __future__ import annotations
@@ -49,28 +49,20 @@ from eventhub_to_timescale_spark.functions.scalars import (
     topic_subject,
 )
 from eventhub_to_timescale_spark.functions.typeinfer import infer_type_tag
-from eventhub_to_timescale_spark.ingest.emon import EMON_SUBJECTS, emon_to_records
-from eventhub_to_timescale_spark.ingest.envelope import materialize
+from eventhub_to_timescale_spark.ingest.emon import EMON_SUBJECTS
+from eventhub_to_timescale_spark.ingest.envelope import materialize, publisher_is
 from eventhub_to_timescale_spark.ingest.glow import (
     GLOW_PAYLOAD_SCHEMA,
     GLOW_SUBJECTS,
     glow_fields,
-    glow_to_records,
 )
 from eventhub_to_timescale_spark.ingest.homie import (
     HOMIE_EVENTS_OF_INTEREST,
     _STRING_MEASURES,
-    homie_to_records,
 )
 from eventhub_to_timescale_spark.schema import TYPE_NUMBER, TYPE_STRING
 
 KNOWN_PUBLISHERS = ("glow", "homie", "emon")
-
-_CONVERTERS = {
-    "glow": glow_to_records,
-    "homie": homie_to_records,
-    "emon": emon_to_records,
-}
 
 _REC_TYPE = (
     "array<struct<measurement_of:string,measurement_value:string,"
@@ -103,17 +95,6 @@ def route_to_records(
     expression only evaluates on unknown-publisher rows (CaseWhen
     short-circuit). This is the onboarding path for a sensor nobody
     has written a declared-struct converter for yet."""
-    from eventhub_to_timescale_spark.ingest import emon as _emon
-
-    if _emon.USE_VARIANT_PATH:
-        # the single-pass plan inlines the emon map parse; honoring the
-        # variant knob here would silently desynchronize the two
-        # routers, so refuse loudly instead
-        raise NotImplementedError(
-            "route_to_records inlines the emon map<string,string> parse; "
-            "with emon.USE_VARIANT_PATH=True use route_to_records_union "
-            "(per-converter plan) for byte-faithful emon leaf text"
-        )
     pub = F.lower(F.col("publisher"))
     has_payload = F.col("payload").isNotNull()
     base = (
@@ -151,7 +132,7 @@ def route_to_records(
     # meter.timestamp (glow.py:17), homie = envelope timestamp
     # (homie.py:33), emon = payload 'time' key (emon.py
     # extract_timestamp), dynamic fallback = envelope timestamp;
-    # null → message dropped, like each converter
+    # null → message dropped, as the reference converters drop it
     rec_ts = (
         F.when(pub == "glow", parse_timestamp_any(meter["timestamp"]))
         .when(pub == "emon", parse_timestamp_any(F.col("kv")["time"]))
@@ -260,10 +241,12 @@ def route_to_records(
 
 
 def route_to_records_union(envelope_df: DataFrame) -> DataFrame:
-    """The round-1 plan — one filtered branch per converter, unioned.
-    Kept as the differential-test baseline for the single-pass router
-    (and as the shape a reader should compare against)."""
-    branches = [conv(envelope_df) for conv in _CONVERTERS.values()]
+    """The union of the single-publisher routes (one source scan each):
+    the differential baseline showing that one pass over mixed traffic
+    equals the per-publisher passes, so no guard leaks across them."""
+    branches = [
+        route_to_records(publisher_is(envelope_df, p)) for p in KNOWN_PUBLISHERS
+    ]
     return reduce(lambda a, b: a.unionByName(b), branches)
 
 

@@ -30,9 +30,10 @@ reference's sequence — documented semantic difference).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from eventhub_to_timescale_spark.functions.scalars import wkt_point
 from eventhub_to_timescale_spark.ingest.envelope import materialize
 from eventhub_to_timescale_spark.schema import (
     TYPE_BOOLEAN,
@@ -42,20 +43,6 @@ from eventhub_to_timescale_spark.schema import (
 )
 
 
-def _geo_to_wkt(value: Column) -> Column:
-    """'[lat, lon]' / 'lat,lon' string → validated WKT (lon first)."""
-    cleaned = F.regexp_replace(value, r"[\[\]\s]", "")
-    lat = F.split(cleaned, ",")[0].cast("double")
-    lon = F.split(cleaned, ",")[1].cast("double")
-    ok = (
-        lat.isNotNull()
-        & lon.isNotNull()
-        & lat.between(-90.0, 90.0)
-        & lon.between(-180.0, 180.0)
-    )
-    return F.when(ok, F.format_string("SRID=4326;POINT(%s %s)", lon, lat))
-
-
 def records_to_conditions(records: DataFrame, with_unique_id: bool = True) -> DataFrame:
     """Long atomic records → wide conditions rows (valid rows only)."""
     t = F.col("measurement_data_type")
@@ -63,6 +50,12 @@ def records_to_conditions(records: DataFrame, with_unique_id: bool = True) -> Da
     bool_val = F.when(
         F.lower(v).isin("true", "false"), F.lower(v) == "true"
     )
+    # a geography value ('[lat, lon]' or 'lat,lon') is split once, in a
+    # Project below the Generate, and the range checks and the WKT
+    # format (lon first) read the parts
+    geo = F.split(F.regexp_replace(v, r"[\[\]\s]", ""), ",")
+    records = records.withColumn("_geo", F.when(t == TYPE_GEOGRAPHY, geo))
+    lat, lon = F.col("_geo")[0].cast("double"), F.col("_geo")[1].cast("double")
     # the typed values are materialized (one-row Generate) so the
     # validity filter reads them as struct fields: over a Project, the
     # filter would be pushed below it with every alias inlined,
@@ -71,7 +64,9 @@ def records_to_conditions(records: DataFrame, with_unique_id: bool = True) -> Da
         F.when(t == TYPE_NUMBER, v.cast("double")).alias("measurement_number"),
         F.when(t == TYPE_STRING, v).alias("measurement_string"),
         F.when(t == TYPE_BOOLEAN, bool_val).alias("measurement_bool"),
-        F.when(t == TYPE_GEOGRAPHY, _geo_to_wkt(v)).alias("measurement_location"),
+        F.when(t == TYPE_GEOGRAPHY, wkt_point(lat, lon)).alias(
+            "measurement_location"
+        ),
     )
     out = materialize(records, typed, "typed").select(
         F.col("timestamp"),

@@ -7,9 +7,11 @@ Reference semantics → Spark mapping:
   ``timescale`` hub between converter and sink functions becomes just
   a checkpointed stage boundary — no second network hop.
 - at-least-once + retry per batch (timescale.py:31-32) ≙ foreachBatch
-  with idempotent writes keyed on (correlation_id, measurement_of):
-  re-delivered batches overwrite deterministically instead of
-  duplicating.
+  whose sink overwrites the batch's own ``date=…/_batch_id=N``
+  directories, so a retried batch replaces its files instead of
+  duplicating them. Nothing is keyed on the message: a replay is
+  idempotent only when its batch boundaries repeat, and two queries
+  must not share an ``out_path`` (see ``write_conditions_stream``).
 - BMW dedup-state table (duplicate_check.py, store-after-send
   ordering §3.2) ≙ ``dropDuplicatesWithinWatermark`` on
   (vin, lastUpdatedAt): state is committed with the sink in the same
@@ -136,11 +138,17 @@ def write_conditions_stream(
     checkpoint_path: str,
     trigger_available_now: bool = False,
 ):
-    """Idempotent micro-batch sink. Each batch is delta-written as
-    parquet partitioned by date; the batch id makes re-delivered
-    batches overwrite their own files (at-least-once → effectively
-    exactly-once on re-run), mirroring what an UPSERT on
-    (correlation_id, measurement_of) does on the JDBC path."""
+    """Micro-batch sink. Each batch is written as parquet under
+    ``date=…/_batch_id=N`` and overwrites exactly those directories, so
+    a retried batch N replaces its own files instead of duplicating
+    them.
+
+    That is idempotent only when batch boundaries repeat: a replay that
+    cuts the same messages into different batches (another
+    ``maxFilesPerTrigger``, a fresh checkpoint) stores them again under
+    other batch ids. Nothing keys on (correlation_id, measurement_of).
+    Two queries must not share an ``out_path``: batch ids restart at 0
+    per query, so one query's batch N replaces the other's."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (

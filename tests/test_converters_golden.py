@@ -131,6 +131,17 @@ def test_glow_uninteresting_topic_dropped(envelopes):
     assert glow_to_records(env).count() == 0
 
 
+def test_glow_payload_missing_subject_key_dropped(envelopes):
+    # a gasmeter topic whose payload carries only the electricitymeter
+    # key has no meter timestamp (reference returns [], glow.py:30-31)
+    from eventhub_to_timescale_spark.ingest.glow import glow_to_records
+
+    env = envelopes(
+        [make_envelope("glow/XXXXXX/SENSOR/gasmeter", GLOW_ELEC_PAYLOAD)]
+    )
+    assert glow_to_records(env).count() == 0
+
+
 @pytest.mark.parametrize(
     "measure,value,expected_type",
     [

@@ -115,9 +115,15 @@ def test_dynamic_to_records_envelope_path(spark):
             "timestamp": "2024-02-01T10:00:00.000000Z",
         }
     )
-    env = parse_envelope(spark.createDataFrame([(body,)], "value string"))
+    # no envelope timestamp → no record timestamp → no rows
+    untimed = json.dumps(
+        {"topic": "dyn/untimed", "payload": json.dumps({"c": 1}), "qos": 0}
+    )
+    env = parse_envelope(
+        spark.createDataFrame([(body,), (untimed,)], "value string")
+    )
     rows = dynamic_to_records(env, "dyn").collect()
-    assert len(rows) == 1
+    assert [r.measurement_subject for r in rows] == ["nested"]
     r = rows[0]
     assert (r.measurement_of, r.measurement_value) == ("b", "3.5")
     assert r.measurement_subject == "nested"

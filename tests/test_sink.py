@@ -3,6 +3,7 @@ coverage model: typed-column routing + value coercion)."""
 
 from __future__ import annotations
 
+import re
 from datetime import datetime
 
 from eventhub_to_timescale_spark.sinks.conditions import (
@@ -50,6 +51,19 @@ def test_geography_accepts_bare_latlon_string(spark):
     df = _recs(spark, [(TS, "s", "p", "g", "51.5,-0.125", "geography", "c")])
     row = records_to_conditions(df, with_unique_id=False).collect()[0]
     assert row.measurement_location == "SRID=4326;POINT(-0.125 51.5)"
+
+
+def test_geography_parsed_once_per_value(spark):
+    # the cleaned coordinate text is bound once, not re-derived for
+    # every range check and format argument; the binding keeps the
+    # pivot's Generate in whole-stage codegen (a lambda binding would
+    # run it interpreted for every record, geography or not)
+    df = _recs(spark, [(TS, "s", "p", "g", "[51.5, -0.125]", "geography", "c")])
+    out = records_to_conditions(df, with_unique_id=False)
+    qe = out._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().count("regexp_replace(") == 1
+    assert re.search(r"\*\(\d+\) Generate explode", qe.executedPlan().toString())
+    assert out.collect()[0].measurement_location == "SRID=4326;POINT(-0.125 51.5)"
 
 
 def test_bad_values_go_to_reject_channel(spark):
