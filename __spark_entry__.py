@@ -2,8 +2,10 @@
 
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``oracle_sql()[name]`` via DuckDB (row count + schema +
+order-insensitive value hash).  ``scripts/check_parity.py`` and
+``tests/test_registry_parity.py`` run the same comparison over every
+entry.
 
 Engine code lives in ``eventhub_to_timescale_spark/``; this module only
 adapts it to the driver's (spark, sf_dir) calling convention. The
@@ -196,7 +198,7 @@ def _q9_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q8_changes_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-key scale path for Q8 (chunked lag, SCALE.md "Windows");
+    """Hot-key scale path for Q8 (chunked lag);
     row-identical to q8_changed_rows, so it shares that oracle.
     Gates the DEFAULT call (r14): chunk_seconds="auto" sizes the
     chunk from the CMS subject-skew profile (r13 verdict ask #3) —
@@ -1909,7 +1911,7 @@ def _dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     al. "Deduplicating Training Data Makes Language Models Better"
     uses Jaccard 0.8) and the measured pair-similarity distribution
     is bimodal (10×-sweep sample: 99.2 % of prefix candidates sit
-    below 0.1, the rest above 0.9 — SCALE.md), so 0.5 and 0.8 emit
+    below 0.1, the rest above 0.9), so 0.5 and 0.8 emit
     the SAME pairs while 0.8 keeps the prefix ~2.5× shorter and the
     candidate set ~20× smaller.  The exact-verify exchange is
     candidate-bound, so the threshold IS the scale dial.
@@ -1923,7 +1925,7 @@ def _dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine witness (prefix filter's recall-1 bound vs brute
     force) now sweeps at sf1.  The production path is the operator
     itself over the FULL corpus — prefix-filtered, candidate-bound,
-    never quadratic (SCALE_SF1.json exp 0.81 pre-bound)."""
+    never quadratic (measured sf1 scale exponent 0.81 pre-bound)."""
     from eventhub_to_timescale_spark.operators.dedup import (
         jaccard_prefix_pairs,
     )
@@ -2888,227 +2890,29 @@ def _dedup_winnow_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r15 head = the r14 head with the two never-witnessed r15 additions
-# (text_bpe_merges / text_bpe_token_count — the rotation-ledger
-# invariant: a never-driver-witnessed entry must sit inside the gate
-# window) swapped in for the two SIBLING-EXEMPT salted variants
-# (q8/q9_..._salted: documented permanent-tail candidates whose
-# mechanism q8/q9_changed_rows witness every round they gate —
-# scripts/rotation_ledger.py SIBLING_WITNESS; both earned driver-green
-# rows in r14).  The minimal interruption-recovery head: the r14 build
-# round registered the BPE entries but was stopped before composing
-# the r15 window.
-_R15_HEAD = [
-    "pipeline_curation_full",
-    "pipeline_curation_report",
-    "dedup_minhash_autoband",
-    "events_quantile_bands_gk",
-    "text_bpe_merges",
-    "text_bpe_token_count",
-    "asof_probe_value_salted",
-    "q1_bucket_avg",
-    "q2_resolution_avg",
-    "q3_daily_max",
-    "q4_mode_adaptive",
-    "q5_timeweight_locf",
-    "q6_asap_smooth",
-    "q6_lttb_downsample",
-    "q7_unique_subjects",
-    "q8_changed_rows",
-    "q9_state_intervals",
-    "asof_probe_value",
-    "range_overlap_join",
-    "gapfill_linear",
-    "ingest_events_unpivot",
-    "ingest_glow",
-    "ingest_homie",
-    "ingest_emon",
-    "ingest_bmw",
-    "ingest_dynamic",
-    "ingest_records_strict",
-    "ingest_router_union",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "sim_cosine_topk",
-    "text_fingerprint",
-    "text_vocab_topk",
-    "pack_documents",
-    "curation_pii_redact",
-    "curation_decontaminate",
-    "curation_repetition",
-    "mm_blob_features",
-    "mm_frame_sample",
-    "mm_resize",
-    "rel_revenue_by_nation",
-    "rel_shipmode_priority",
-    "events_journey_trigrams",
-    "dedup_substr_clean",
-    "pipeline_dedup_full",
-    "emb_random_projection",
-    "dedup_semantic_default",
-    "sketch_kmv_overlap",
-    "curation_normalize",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness gate records only the
-    # FIRST 50 entries (observed in round 5: 53 registered, 50 in
-    # CORRECTNESS_r05.json).  Entries with a unique oracle surface sit
-    # in the head; shared-oracle rewrites and sibling-witnessed
-    # variants sit in the tail, where scripts/check_parity.py and
-    # tests/test_gate_tail_parity.py verify them every run.
-    #
-    # ROTATION LEDGER — every query earns a driver-green CORRECTNESS
-    # row at least once every 2 rounds (permanent-tail entries below
-    # are the documented exemption: sibling-witnessed mechanisms):
-    #   r6 head: the 50 pre-r6 entries (CORRECTNESS_r06.json green).
-    #   r7 head: promoted 8 r6 families (sketches, toolkit, native
-    #     sessionize, relational, unigram-LM); demoted 8
-    #     sibling-witnessed entries (CORRECTNESS_r07.json 50/50 green).
-    #   r8 head (this round, VERDICT r7 ask #2): two groups rotate
-    #     IN — (a) the 8 r7 demotions, last gated r6 and due
-    #     (q3_intraday_avg, q5_timeweight_linear, q3_daily_from_cascade,
-    #     dedup_components, dedup_ngram_jaccard, text_quality_sample_cut,
-    #     text_language_id, text_token_stats); (b) the 8 r7-new
-    #     operators, never yet driver-gated (rel_returned_revenue,
-    #     rel_large_orders, sample_source_quota, sample_docs_weighted,
-    #     events_live_intervals, events_cohort_retention, events_funnel,
-    #     dedup_substr_windows).  16 rotate OUT (all gated green in r7,
-    #     due again r9): the 8 r7 promotions, plus 8 core entries whose
-    #     mechanism a rotating-IN sibling witnesses this round —
-    #     dedup_components_keep (contains dedup_components' plan;
-    #     survivor anti-join witnessed by dedup_minhash_keep parity),
-    #     pipeline_clean_corpus (composes gated language_id+token_stats
-    #     +quality), text_quality_percentile + text_quality_score
-    #     (variant pair of the gated sample_cut), sample_docs_fraction
-    #     (same md5-threshold membership as the gated weighted/quota),
-    #     sim_ann_lsh + sim_ivf_topk + dedup_embedding_cosine (gated
-    #     r6+r7; sim_cosine_topk keeps the similarity surface
-    #     witnessed).  dedup_simhash stays although unrotated: its
-    #     fingerprint widened to 64-bit THIS round and must be
-    #     re-witnessed by the driver.
-    #   r9 head (this round, VERDICT r8 ask #1): the never-gated
-    #     backlog (47 r8-new entries + 9 r6-tail families + the new
-    #     pipeline_dedup_full) outgrew the 16 rotation slots the
-    #     34-entry always-gated core left, so the core's head
-    #     RESIDENCY IS SUSPENDED for r9-r10 while the backlog clears
-    #     (the core mechanisms all earned driver-green rows in r6-r8
-    #     and keep their tail parity pins every round —
-    #     tests/test_gate_tail_parity.py now pins the planned head
-    #     list itself).  r9 head = newest-first: the 13 r8 third-wave
-    #     entries, pipeline_dedup_full (NEW r9: the composed
-    #     Lee-et-al./Abbas-et-al. chain), the 9 r8 second-wave
-    #     entries, the 6 third-relational-wave entries, the 19 r8
-    #     first-wave entries, plus the 2 most-overdue r6-tail entries
-    #     (sketch_histogram, rel_revenue_by_nation) = 50.
-    #   r10 head (this round, VERDICT r9 asks #1/#2/#4): three groups,
-    #     exactly 50 —
-    #     (a) the 5 r9 RED ROWS re-gated (a red row must be re-gated,
-    #         not rotated away): the 4 HUGEINT-oracle hash fails, now
-    #         CAST AS BIGINT (rel_shipmode_priority,
-    #         events_journey_trigrams, dedup_substr_clean,
-    #         pipeline_dedup_full) and the array-output _canon crash
-    #         (emb_random_projection), now posexploded to scalar rows
-    #         on both sides;
-    #     (b) the 11 never-gated entries — the 4 r9-new tail entries
-    #         (dedup_semantic_default, sketch_kmv_overlap,
-    #         curation_normalize, dedup_exact_normalized) and the 7
-    #         never-gated r6-tail families (toolkit_ohlc,
-    #         toolkit_trend_slope, emb_normalize_quantize — also
-    #         posexploded, it was the latent twin of the r9 array
-    #         crash — doc_chunks, corpus_shard_order,
-    #         events_sessionize, toolkit_gauge_delta);
-    #     (c) the 34 suspended-core entries, restored at their
-    #         documented 3-round unwitnessed ceiling.
-    #     5 + 11 + 34 = 50 leaves NO slots for the 16 r8 demotions
-    #     (green r7, now 3 rounds unwitnessed) or the 16 r7-rotation
-    #     groups (green r8): both wait for r11 and keep their
-    #     check_parity + test_gate_tail_parity witnesses every round.
-    #     The 45 green r9-head entries demote to the tail, freshly
-    #     driver-green.
-    #   r11 head (this round, VERDICT r10 ask #1 — the r10 prose plan
-    #     had drifted from the registry, which is why the table of
-    #     record is now GENERATED: scripts/rotation_ledger.py scans
-    #     CORRECTNESS_r01..rN + this dict and writes ROTATION.md,
-    #     exiting nonzero if any never-witnessed entry sits outside
-    #     the head).  Four groups, exactly 50:
-    #     (a) ALL 15 never-witnessed entries — the 13 r10 additions,
-    #         asof_probe_value_salted (never gated in any round; the
-    #         r10 comment missed it), and the NEW r11
-    #         dedup_stream_neardup_twin (the streaming MinHash-band
-    #         near-dup dedup's batch twin, born under the type-strict
-    #         oracle contract like every new entry: integer SUMs CAST
-    #         AS BIGINT, no HUGEINT/DECIMAL/array/struct output —
-    #         enforced by tests/test_oracle_types.py on the whole
-    #         registry);
-    #     (b) the 16 r8 demotions (last gated r7, most overdue);
-    #     (c) r7-rotation groups (last gated r8) as slots allow;
-    #     (d) no r9-head demotions — FINAL r11 composition: the round
-    #         grew the registry to 165 (15 new operators, each
-    #         never-witnessed and so head-resident by the ledger
-    #         invariant), which pushed group (a) to 29 entries and
-    #         ceded the (d) slot plus ten (c) slots; the ceded
-    #         entries (text_bm25_topk green r9; dedup_substr_windows,
-    #         events_cohort_retention, events_funnel,
-    #         events_live_intervals, sample_docs_weighted,
-    #         sample_source_quota, rel_large_orders,
-    #         rel_returned_revenue, text_token_stats,
-    #         text_language_id, text_quality_sample_cut green r8)
-    #         lead the r12 pool and keep their check_parity +
-    #         test_gate_tail_parity witnesses every round.
-    #     After this round's gate, 29 more entries earn their first
-    #     driver row (ROTATION.md is the generated verification
-    #     artifact); r12 resumes the standing 2-round cadence with
-    #     the ceded (c) pool first, then the r9-green demotions.
-    #   r12 head (this round, VERDICT r11 ask #1 — the rotation the
-    #     cadence test hardcoded): four groups, exactly 50 —
-    #     (a) the 2 NEW never-witnessed entries, head-resident by the
-    #         ledger invariant: dedup_cdc_gear (the gear rolling-hash
-    #         CDC scale twin, ask #2) and dedup_stream_cdc_twin (the
-    #         streaming CDC-chunk dedup's batch twin, ask #5);
-    #     (b) the 34-entry always-gated §2 core, green r10 and due on
-    #         the standing 2-round cadence;
-    #     (c) the 11 most-overdue demotions (the r8-green entries
-    #         that ceded their r11 slots);
-    #     (d) the round's 3 later additions (sketch_bloom_probe —
-    #         the membership sketch beside HLL/CMS/KMV/GK —
-    #         events_quantile_bands, and sketch_join_size — the CMS
-    #         inner-product join-cardinality estimator),
-    #         never-witnessed and so head-resident by the ledger
-    #         invariant; they displaced the planned r9-pool
-    #         promotions and text_bm25_topk (green r9, the least
-    #         overdue of group (c), now leading the r13 pool).
-    #     5 + 34 + 11 = 50.  CAPACITY NOTE, recorded rather than
-    #     hidden: the 44-entry r9-green pool got no r12 slots after
-    #     the core restoration, so it reaches since-3 at r12 close —
-    #     it leads the r13 head (registry order), with the 16
-    #     r10-green demotions due r13/r14 behind it; all keep their
-    #     check_parity + test_gate_tail_parity witnesses every round
-    #     meanwhile.  The 50 r11-head entries demote to the tail,
-    #     freshly driver-green.
-    reg = {
-        # ------------- registry (historical r12 head order follows;
-        # the LIVE gate head is _R15_HEAD, applied at return) -------
-        # — (a) the 2 NEW never-driver-witnessed r12 entries (gear
-        #   CDC scale twin + streaming CDC-dedup batch twin)
-        "dedup_cdc_gear": _dedup_cdc_gear,
-        "dedup_stream_cdc_twin": _dedup_stream_cdc_twin,
-        # — (b) the 34-entry always-gated §2 core, restored per the
-        #   standing 2-round cadence (green r10, demoted for r11's
-        #   never-witnessed backlog, due r12 — the rotation the
-        #   cadence test hardcodes)
+    # The paper's surface comes first: Q1–Q9 with their variants, the
+    # as-of / range / gap-fill temporal queries, then the ingest
+    # entries.  Every other workload follows.
+    return {
         "q1_bucket_avg": _q1,
+        "q1_all_subjects": _q1_all_subjects,
+        "q1_from_rollup": _q1_from_rollup,
         "q2_resolution_avg": _q2,
         "q3_daily_max": _q3_daily,
+        "q3_intraday_avg": _q3_intraday,
+        "q3_daily_from_cascade": _q3_daily_from_cascade,
         "q4_mode_adaptive": _q4_mode,
         "q5_timeweight_locf": _q5_locf,
+        "q5_timeweight_linear": _q5_linear,
         "q6_asap_smooth": _q6_asap,
         "q6_lttb_downsample": _q6_lttb,
+        "q6_moving_avg": _q6_moving_avg,
         "q7_unique_subjects": _q7_subjects,
         "q8_changed_rows": _q8_changes,
+        "q8_changed_rows_salted": _q8_changes_salted,
         "q9_state_intervals": _q9_intervals,
+        "q9_state_intervals_salted": _q9_intervals_salted,
         "asof_probe_value": _asof_probe_value,
         "range_overlap_join": _range_overlap,
         "gapfill_linear": _gapfill_linear,
@@ -3120,6 +2924,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ingest_dynamic": _ingest_dynamic,
         "ingest_records_strict": _ingest_records_strict,
         "ingest_router_union": _ingest_router,
+        "dedup_cdc_gear": _dedup_cdc_gear,
+        "dedup_stream_cdc_twin": _dedup_stream_cdc_twin,
         "dedup_exact": _dedup_exact,
         "dedup_minhash_lsh": _dedup_minhash,
         "dedup_simhash": _dedup_simhash,
@@ -3133,9 +2939,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_blob_features": _mm_blob_features,
         "mm_frame_sample": _mm_frame_sample,
         "mm_resize": _mm_resize,
-        # — (c) the 12 most-overdue demotions: the 11 r8-green
-        #   entries that ceded their r11 slots + text_bm25_topk
-        #   (green r9)
         "dedup_substr_windows": _dedup_substr_windows,
         "events_cohort_retention": _events_cohort_retention,
         "events_funnel": _events_funnel,
@@ -3147,18 +2950,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_token_stats": _text_tokens,
         "text_language_id": _text_langid,
         "text_quality_sample_cut": _text_quality_sample_cut,
-        # — (d) the other 2 NEW never-witnessed r12 entries (Bloom
-        #   membership sketch; exact quantile bands) — head-resident
-        #   by the ledger invariant; they displaced the planned
-        #   r9-pool promotions, so the FULL 44-entry r9-green pool
-        #   leads the r13 head
         "sketch_bloom_probe": _sketch_bloom_probe,
         "events_quantile_bands": _events_quantile_bands,
         "sketch_join_size": _sketch_join_size,
-        # --- tail: entries past the driver's 50-entry gate window.
-        # Every tail entry keeps its own oracle — scripts/check_parity.py
-        # and tests/test_gate_tail_parity.py verify them every run.
-        # — r11-head demotions (driver-green r11, the freshest rows)
         "dedup_stream_neardup_twin": _dedup_stream_neardup_twin,
         "events_cusum_alarms": _events_cusum_alarms,
         "dedup_cdc_chunks": _dedup_cdc_chunks,
@@ -3204,13 +2998,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rel_pricing_summary": _rel_pricing_summary,
         "rel_top_orders": _rel_top_orders,
         "text_unigram_lm": _text_unigram_lm,
-        "q3_intraday_avg": _q3_intraday,
-        "q5_timeweight_linear": _q5_linear,
-        "q3_daily_from_cascade": _q3_daily_from_cascade,
         "dedup_components": _dedup_components,
         "dedup_ngram_jaccard": _dedup_ngram,
-        # — r9-green pool (due r13: since-3 by then; the ledger
-        #   documents the r13/r14 split of this pool + the r10 pool)
         "text_bm25_topk": _text_bm25_topk,
         "sample_dsir_topn": _sample_dsir_topn,
         "curation_gopher_quality": _curation_gopher_quality,
@@ -3256,7 +3045,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_bigram_lm": _text_bigram_lm,
         "sketch_histogram": _sketch_histogram,
         "rel_revenue_by_nation": _rel_revenue_by_nation,
-        # — r10-head demotions (driver-green r10)
         "rel_shipmode_priority": _rel_shipmode_priority,
         "events_journey_trigrams": _events_journey_trigrams,
         "dedup_substr_clean": _dedup_substr_clean,
@@ -3273,88 +3061,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_shard_order": _corpus_shard_order,
         "events_sessionize": _events_sessionize,
         "toolkit_gauge_delta": _toolkit_gauge_delta,
-        # — permanent tail (documented sibling-witnessed mechanisms;
-        #   ROTATION.md names each witness): q1_all_subjects = q1 + a
-        #   group key; dedup_minhash_keep = one anti-join atop the
-        #   witnessed pair frame (verdict twin dedup_stream_neardup_twin
-        #   gated r11); sample_split_counts / sample_events_stratified =
-        #   the gated md5-threshold membership under another salt /
-        #   strata column; q6_moving_avg = the trivial rangeBetween
-        #   fallback beside the gated ASAP/LTTB; gapfill_locf =
-        #   gapfill_linear's grid + the LOCF carry witnessed by
-        #   q5_timeweight_locf / q9_state_intervals; q1_from_rollup,
-        #   q8/q9 _salted = shared-oracle rewrites property-tested
-        #   row-identical to head siblings (asof_probe_value_salted
-        #   graduated r11)
-        "q1_all_subjects": _q1_all_subjects,
         "dedup_minhash_keep": _dedup_minhash_keep,
         "sample_split_counts": _sample_split_counts,
         "sample_events_stratified": _sample_events_stratified,
-        "q6_moving_avg": _q6_moving_avg,
         "gapfill_locf": _gapfill_locf,
-        "q1_from_rollup": _q1_from_rollup,
-        "q8_changed_rows_salted": _q8_changes_salted,
-        "q9_state_intervals_salted": _q9_intervals_salted,
-        # — r13 additions (registered here; _R15_HEAD places them)
         "events_quantile_bands_gk": _events_quantile_bands_gk,
         "sketch_bloom_stream_twin": _sketch_bloom_stream_twin,
         "sketch_join_profile": _sketch_join_profile,
         "sim_rrf_fusion": _sim_rrf_fusion,
-        # — r14 additions (registered here; _R15_HEAD places them)
         "pipeline_curation_full": _pipeline_curation_full,
         "pipeline_curation_report": _pipeline_curation_report,
         "dedup_minhash_autoband": _dedup_minhash_autoband,
-        # — r15 additions (registered here; _R15_HEAD places them)
         "text_bpe_merges": _text_bpe_merges,
         "text_bpe_token_count": _text_bpe_token_count,
     }
-    # ------------- r14 GATE HEAD (50 entries) -------------
-    # Composed per ROTATION.md's committed r14 staleness queue
-    # (regenerated from CORRECTNESS_r13.json), reordered at return
-    # time so the big literal above stays in stable registry order:
-    #   (a) the 3 NEW never-witnessed r14 entries, head-resident by
-    #       the ledger invariant: pipeline_curation_full (the
-    #       composed end-to-end curation chain, r13 verdict ask #2),
-    #       pipeline_curation_report (its stage-attrition audit),
-    #       and dedup_minhash_autoband (threshold-solved LSH
-    #       banding — the self-sizing theme of asks #3/#4);
-    #   (b) the 4 RE-GATES for r14-changed surfaces:
-    #       events_quantile_bands_gk now gates accuracy="auto" (the
-    #       self-sizing probe, ask #4); q8_changed_rows_salted /
-    #       q9_state_intervals_salted / asof_probe_value_salted now
-    #       gate chunk_seconds="auto" (the CMS-sized salt, ask #3) —
-    #       a changed surface needs a fresh driver witness (the r13
-    #       phash rule);
-    #   (c) the 34-entry always-gated §2 core, green r12 and DUE on
-    #       the standing 2-round cadence (r10, r12 → r14);
-    #   (d) the 9 queue-front entries by rounds-since-witness:
-    #       rel_revenue_by_nation (since-5) then the r10-green
-    #       since-4 pool front (rel_shipmode_priority ...
-    #       curation_normalize) in ROTATION.md queue order.
-    #   3 + 4 + 34 + 9 = 50.  The remaining since-4 pool
-    #   (dedup_exact_normalized and toolkit_ohlc — displaced by the
-    #   two later r14 additions — then toolkit_trend_slope,
-    #   emb_normalize_quantize, doc_chunks, corpus_shard_order,
-    #   events_sessionize, toolkit_gauge_delta) leads the r15 queue;
-    #   the 44 r13-head entries demote to the tail freshly
-    #   driver-green.
-    # a misspelled/renamed/duplicated head entry must fail FAST at
-    # registration, not silently slide the first tail entry into the
-    # driver's 50-entry witnessed window (r13 ADVICE + r14 review:
-    # a duplicate name dedupes in the returned dict and shrinks the
-    # window the same way a missing one would; real raise, not
-    # assert, so `python -O` can't strip the guard)
-    missing = set(_R15_HEAD) - reg.keys()
-    if missing:
-        raise RuntimeError(f"gate-head entries not in registry: {missing}")
-    if len(_R15_HEAD) != len(set(_R15_HEAD)) or len(_R15_HEAD) != 50:
-        raise RuntimeError(
-            f"gate head must be 50 unique entries, got {len(_R15_HEAD)} "
-            f"({len(set(_R15_HEAD))} unique)"
-        )
-    head = list(_R15_HEAD)
-    tail = [k for k in reg if k not in set(_R15_HEAD)]
-    return {k: reg[k] for k in head + tail}
 
 
 def _chunking_oracle() -> str:
@@ -4629,9 +4349,8 @@ ORDER BY 1, 3
         "mm_blob_features": oc.mm_blob_oracle(),
         "mm_frame_sample": oc.mm_frame_oracle(4),
         "mm_resize": oc.mm_resize_oracle(16, 12),
-        # --- tail (past the driver gate window): demoted entries keep
-        # their own oracles; salted/rollup rewrites share the head
-        # oracles their property tests prove them identical to
+        # salted/rollup rewrites share the oracles of the entries their
+        # property tests prove them identical to
         "q1_all_subjects": q1_all,
         "dedup_stream_neardup_twin": oc.dedup_verdicts_oracle(12, 6, 0.5),
         "events_cusum_alarms": _cusum_oracle(),
@@ -4666,7 +4385,7 @@ ORDER BY 1, 3
         "curation_pii_redact": oc.curation_pii_oracle(),
         "curation_decontaminate": oc.curation_contamination_oracle(5, 97),
         "curation_repetition": oc.curation_repetition_oracle(3),
-        # round-6 tail additions (toolkit aggregates + training prep)
+        # toolkit aggregates + training prep
         "toolkit_counter_delta": f"""
 WITH samples AS (
   SELECT measurement_subject, timestamp, measurement_unique_id,

@@ -22,7 +22,7 @@ TWO chunkers live here — pick by role:
   O(1)-per-position gear rolling hash (the FastCDC/gear family, Xia
   et al., USENIX ATC 2016) vectorized in numpy inside a zero-shuffle
   ``mapInPandas`` (plan-pinned, tests/test_plan_pins_r12.py).
-  Measured sf1: 1.15 s, scale exponent −0.09 (SCALE.md).
+  Measured sf1: 1.15 s, scale exponent −0.09.
 - ``cdc_chunks`` (md5-window boundaries, below) is the ORACLE-WITNESS
   form ONLY — retained because its boundary rule is reproducible
   verbatim in DuckDB SQL, which makes it the cross-engine anchor the

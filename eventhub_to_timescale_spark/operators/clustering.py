@@ -214,7 +214,7 @@ def semantic_dedup_keep(
       ``k = max(8, n // target_cluster_size)`` (one bounded count()
       up front), so expected cluster size — and with it per-row pair
       fan-out — stays constant as N grows (measured at sf1: exponent
-      1.17 at fixed k=8 → 0.80 in the k∝N regime, SCALE.md).  Pass an
+      1.17 at fixed k=8 → 0.80 in the k∝N regime).  Pass an
       explicit ``k`` only when a FIXED clustering is the point (the
       stable-oracle gate entry does).
     - ``vectorized_assign=None`` auto-selects: the pure-JVM expression

@@ -631,7 +631,7 @@ def minhash_keep_first(
     cached so one scan of ``docs`` feeds both the pair subplan and the
     survivor anti-join, and the banded-signature frame is cached so
     the LSH self-join computes shingles + signatures once instead of
-    twice (SCALE.md previously conceded this double scan).
+    twice.
     ``persist=False`` keeps the plan fully lazy/deterministic for
     oracle comparison. Output rows are identical either way.
     """
@@ -902,8 +902,7 @@ def jaccard_prefix_pairs(
     kept the full logical plan under every consumer, so Catalyst
     re-planned the window subtree per branch and AQE compiled the
     candidate join without runtime size facts; the boundary hands
-    every consumer a leaf (plan: 30 Exchanges → see
-    plans/r16/dedup_jaccard_prefix_after.txt) and the verify joins'
+    every consumer a leaf and the verify joins'
     strategies are now AQE-chosen from real sizes instead of forced
     shuffle_hash hints — the same migration minhash_lsh_pairs made in
     r15.  ``persist_frames=False`` stays the fully-lazy recomputable

@@ -24,7 +24,7 @@ two consumers (embedding semi-join + final join), and the semantic
 stage compares pairs only within k-means clusters (k ∝ N by default;
 the caller may pin k for a stable oracle).  Caches follow the
 caller-releases contract shared by every persist-using operator here
-(bench.py / check_parity.py clear between queries).
+(scripts/check_parity.py clears between queries).
 """
 
 from __future__ import annotations

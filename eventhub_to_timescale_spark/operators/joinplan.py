@@ -41,11 +41,11 @@ SIZE THE SKETCH FOR THE KEY SPACE: the inner-product error is
 ≈ n_left·n_right/w per depth row, so the registry's gate-demo w=64
 is for ~dozens of keys; pass w ≥ a few × the expected distinct-key
 count for planning use (measured: 10 000-key fixture at w=64
-estimated 89.5 G rows vs 600 M exact; w=16 384 estimated 0.72 G —
-SCALE.md round 13).  The heavy-key signal (est_max) is robust at
-small w; the join-size signal is the one that needs width.
+estimated 89.5 G rows vs 600 M exact; w=16 384 estimated 0.72 G).
+The heavy-key signal (est_max) is robust at small w; the join-size
+signal is the one that needs width.
 
-AQE INTERPLAY, measured honestly (SCALE.md round 13): with
+AQE INTERPLAY, measured: with
 spark.sql.adaptive skew-join ON (this repo's default session), the
 runtime already splits skewed JOIN partitions, so manual salting of
 a plain equi-join is NOT faster locally — ``salt`` advice earns its
@@ -220,9 +220,10 @@ def choose_salt_factor(
     seed: str = CMS_SEED,
 ) -> int:
     """Sketch-measured salt factor for the WINDOW/AGGREGATION family
-    — the paths AQE cannot split (its runtime skew handling is
-    join-only; measured in scripts/skew_evidence.py), where the r13
-    joinplan work showed manual salting of plain JOINS loses to AQE.
+    — the paths AQE cannot split: measured, its runtime skew handling
+    splits skewed join partitions but leaves a window exchange's hot
+    partition whole.  For plain JOINS manual salting loses to AQE (see
+    the module docstring).
 
     Same decision rule as ``choose_join_strategy``'s salt branch, one
     side only: a key heavier than ``skew_ratio`` fair task-shares

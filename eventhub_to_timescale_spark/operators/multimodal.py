@@ -472,7 +472,7 @@ def phash_neardup_pairs(
     CONFIG (r11 verdict ask #3): ``n_bands=None`` auto-selects the
     WIDEST lossless banding for the requested distance — t=3 (the
     default) → 4×16-bit bands, 65 536 buckets per band, measured 3.3 s
-    vs 63 s for byte bands at sf1 (SCALE.md) — so the as-documented
+    vs 63 s for byte bands at sf1 — so the as-documented
     call is the plan that survives a 100× scale-up.  Passing an
     explicit ``n_bands`` opts into narrower bands (e.g. 8 byte-bands
     for t up to 7 on corpora whose bucket sizes stay moderate);
@@ -618,8 +618,7 @@ def phash_dup_verdicts(
 
     Output is at most one row per document — linear in corpus size —
     where the raw pair frame is density-bound (a corpus of heavy
-    near-dup clusters has quadratically many true pairs; see
-    SCALE.md).  Pipelines that only need "drop later copies" should
+    near-dup clusters has quadratically many true pairs).  Pipelines that only need "drop later copies" should
     consume this frame, mirroring the minhash/winnow keep-first
     variants (operators/dedup.py).
     """

@@ -23,8 +23,7 @@ cascade it to coarser resolutions without touching raw data again.
 
 Storage note: persist with ``write_conditions_bucketed``-style
 bucketing on (subject) and partition by bucket date — queries then
-prune to the requested window and never shuffle (SCALE.md
-"Storage & pruning").
+prune to the requested window and never shuffle.
 """
 
 from __future__ import annotations

@@ -9,8 +9,13 @@ Scale design notes (local-test ≠ target: these run against a 100 TB
 time-partitioned table):
 - Each query starts with equality predicates on dimension columns plus
   a timestamp BETWEEN — expressed FIRST so Catalyst pushes them into
-  the parquet scan (partition pruning on the date partition ≙
-  TimescaleDB chunk exclusion; row-group min/max ≙ its indexes).
+  the parquet scan as data filters (row-group min/max ≙ its indexes).
+  They do NOT prune date partitions today (no TimescaleDB chunk
+  exclusion yet): the store is partitioned by ``date`` and the
+  predicate is on ``timestamp``, so a 1-day ``aggregated_by_interval``
+  over a ``write_conditions_parquet`` store scans with
+  ``PartitionFilters: []`` and reads every date.  ROADMAP direction 1
+  adds the date predicate.
 - Bucketing uses flat epoch-floor arithmetic (one codegen'd column),
   so the groupBy key is a single 8-byte value — map-side partial
   aggregation applies, and the shuffle carries one bucket per
@@ -367,8 +372,8 @@ def changed_rows_salted(
     the CMS probe, only the span aggregate runs — r14 ADVICE #3).
 
     ``Window.partitionBy(subject)`` concentrates a hot subject's whole
-    history in ONE task, and AQE cannot split a window exchange (its
-    skew handling is join-only — measured in scripts/skew_evidence.py).
+    history in ONE task, and AQE cannot split a window exchange
+    (measured: its skew handling splits joins, not window exchanges).
     Rewrite: lag within (subject, chunk) partitions — parallelism =
     subjects x chunks regardless of key skew — then repair each
     chunk's first row from a per-chunk summary (one row per non-empty

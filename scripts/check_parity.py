@@ -4,17 +4,19 @@ same parquet tables, compare row count + column names + order-
 insensitive values.
 
 Usage: python scripts/check_parity.py [sf_dir] [query ...]
-              [--json=PATH]   write {name: {"pass": bool, "rows": n}}
-                              (the committed PARITY_r{N}.json artifact)
+
+It imports the ``__spark_entry__`` of the checkout it lives in.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
@@ -128,55 +130,37 @@ def row_key(row):
 
 
 def main() -> int:
-    json_out = None
-    args = []
-    for a in sys.argv[1:]:
-        if a.startswith("--json="):
-            json_out = a.split("=", 1)[1]
-        else:
-            args.append(a)
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     # data-dependent oracles (IVF centroid literals) must train on the
     # same sf dir the Spark side reads; the driver's gate uses the
     # sf0.01 default
-    import os
-
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     only = set(args[1:])
+    # Python workers (pandas UDFs) import the package too: send them to
+    # the same checkout whatever the current directory is
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     spark = get_spark(shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
-        # driver testdata ships single files; Spark-written scaled data
-        # (scale_evidence.py) ships part-file directories — glob those
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
         )
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    # The driver's correctness gate records only the first N registry
-    # entries (N=50 observed in round 5).  Everything past that window
-    # must be a shared-oracle rewrite covered by a property test.
-    DRIVER_GATE_WINDOW = 50
-    beyond = list(qs)[DRIVER_GATE_WINDOW:]
-    if beyond and not only:
-        print(
-            f"NOTE: {len(beyond)} entries sit past the driver's "
-            f"{DRIVER_GATE_WINDOW}-entry gate window: {beyond}"
-        )
     failures = []
-    results: dict[str, dict] = {}
     checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         checked += 1
         # release the previous query's caller-owned operator caches
-        # (persist_banded &c.) so a 130-query sweep doesn't accumulate
+        # (persist_banded &c.) so a full-registry sweep doesn't accumulate
         # JVM storage pressure
         spark.catalog.clearCache()
         try:
@@ -185,18 +169,11 @@ def main() -> int:
             srows = sdf.collect()
         except Exception as e:
             failures.append(name)
-            results[name] = {"pass": False, "err": str(e)[:200]}
             print(f"FAIL {name}: spark error: {e}")
             continue
         if name not in oracles:
-            print(f"OK?  {name}: rows-only check, {len(srows)} rows")
-            results[name] = {
-                "pass": len(srows) > 0,
-                "rows": len(srows),
-                "rows_only": True,
-            }
-            if len(srows) == 0:
-                failures.append(name)
+            failures.append(name)
+            print(f"FAIL {name}: no SQL oracle")
             continue
         try:
             rel = con.sql(oracles[name])
@@ -206,7 +183,6 @@ def main() -> int:
             drows = rel.fetchall()
         except Exception as e:
             failures.append(name)
-            results[name] = {"pass": False, "err": str(e)[:200]}
             print(f"FAIL {name}: duckdb error: {e}")
             continue
         ok = True
@@ -236,29 +212,10 @@ def main() -> int:
                 print(f"FAIL {name}: value mismatch; first diffs:")
                 for a, b in diffs:
                     print(f"  spark={a}\n  duck ={b}")
-        results[name] = {"pass": ok, "rows": len(srows)}
         if ok:
             print(f"PASS {name}: {len(srows)} rows")
         else:
             failures.append(name)
-
-    if json_out:
-        import json
-
-        with open(json_out, "w") as fh:
-            json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "checked": checked,
-                    "registered": len(qs),
-                    "failures": sorted(failures),
-                    "queries": results,
-                },
-                fh,
-                indent=1,
-                sort_keys=True,
-            )
-        print(f"wrote {json_out}")
 
     print()
     if not only and checked != len(qs):

@@ -10,10 +10,9 @@ from eventhub_to_timescale_spark.session import get_spark
 @pytest.fixture(scope="session")
 def spark():
     # default.parallelism=4: test inputs are tiny createDataFrame
-    # frames; the 32-slice default schedules 32 near-empty tasks per
-    # action across ~3000 actions in the suite (pure scheduling
-    # overhead — measured on representative files, see
-    # OPTIMIZATION_r16.md "driver verify window")
+    # frames, and a default slice count of one per core would schedule
+    # many near-empty tasks per action across the suite's thousands of
+    # actions (pure scheduling overhead)
     s = get_spark(
         app_name="tests",
         shuffle_partitions=4,

@@ -1,6 +1,6 @@
 """Bucketed conditions store: the one-time write-side shuffle must buy
-Exchange-free subject aggregations afterwards (SCALE.md joins/windows
-posture — the Spark analogue of the reference's subject indexes)."""
+Exchange-free subject aggregations afterwards (the Spark analogue of
+the reference's subject indexes)."""
 
 from __future__ import annotations
 
