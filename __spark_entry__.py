@@ -4,7 +4,7 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row count + schema +
 order-insensitive value hash).  ``scripts/check_parity.py`` and
-``tests/test_registry_parity.py`` run the same comparison over every
+``tests/test_gate_tail_parity.py`` run the same comparison over every
 entry.
 
 Engine code lives in ``eventhub_to_timescale_spark/``; this module only

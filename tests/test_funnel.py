@@ -1,6 +1,6 @@
 """Semantic tests for the ordered-step funnel (operators/funnel.py):
 greedy earliest-progression mechanics on hand-built frames.
-Cross-engine parity runs in check_parity / test_registry_parity.
+Cross-engine parity runs in check_parity / test_gate_tail_parity.
 """
 
 from __future__ import annotations

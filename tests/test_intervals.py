@@ -1,7 +1,7 @@
 """Semantic tests for interval coalescing (operators/intervals.py):
 island mechanics on hand-built frames plus a brute-force equivalence
 sweep on seeded pseudo-random interval sets. Cross-engine parity runs
-in check_parity / test_registry_parity.
+in check_parity / test_gate_tail_parity.
 """
 
 from __future__ import annotations

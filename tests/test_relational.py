@@ -1,7 +1,7 @@
 """Semantic tests for the relational star-schema queries
 (operators/relational.py) on tiny hand-built frames — integer-cents
 exactness, filter edges, and deterministic top-k ties.  Cross-engine
-parity runs in check_parity / test_registry_parity.
+parity runs in check_parity / test_gate_tail_parity.
 """
 
 from __future__ import annotations

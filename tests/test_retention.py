@@ -1,5 +1,5 @@
 """Semantic tests for cohort retention (operators/retention.py).
-Cross-engine parity runs in check_parity / test_registry_parity.
+Cross-engine parity runs in check_parity / test_gate_tail_parity.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Semantic tests for the r7 sampling additions: per-source quota and
 weighted deterministic sampling (operators/sampling.py). Cross-engine
-parity runs in check_parity / test_registry_parity.
+parity runs in check_parity / test_gate_tail_parity.
 """
 
 from __future__ import annotations

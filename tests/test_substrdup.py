@@ -1,6 +1,6 @@
 """Semantic tests for cross-document substring duplication
 (operators/substrdup.py). Cross-engine parity runs in check_parity /
-test_registry_parity.
+test_gate_tail_parity.
 """
 
 from __future__ import annotations

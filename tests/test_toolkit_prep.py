@@ -1,7 +1,7 @@
 """Semantic edge cases for the round-6 toolkit aggregates
 (counter/ohlc/trend) and training-prep operators (quantize, chunking,
 shard order) — parity with DuckDB is covered by check_parity +
-test_registry_parity; these pin the boundary semantics directly.
+test_gate_tail_parity; these pin the boundary semantics directly.
 """
 
 from __future__ import annotations
