@@ -25,6 +25,13 @@ import sys
 _HERE = os.path.dirname(os.path.abspath(__file__))
 if _HERE not in sys.path:
     sys.path.insert(0, _HERE)
+# Python workers (the pandas UDFs of q6_asap_smooth/q6_lttb_downsample)
+# import the package too but never see this process's sys.path; a JVM
+# launched after this import hands PYTHONPATH on to them
+if _HERE not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_HERE, os.environ.get("PYTHONPATH")) if p
+    )
 
 from collections.abc import Callable
 from datetime import datetime
@@ -151,11 +158,11 @@ def _q6_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q1_all_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from eventhub_to_timescale_spark.operators.timeseries import _slice
+    from eventhub_to_timescale_spark.operators.timeseries import time_slice
     from eventhub_to_timescale_spark.functions.scalars import epoch_bucket
 
     cond = _conditions(spark, sf_dir)
-    sliced = _slice(cond, None, "value", START, END)
+    sliced = time_slice(cond, None, "value", START, END)
     return (
         sliced.groupBy(
             "measurement_subject",

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eventhub_to_timescale_spark.functions.scalars import epoch_bucket
+from eventhub_to_timescale_spark.operators.timeseries import _ordered, time_slice
 from eventhub_to_timescale_spark.plans.adaptive import resolution_bucket_seconds
 
 _OUT_SCHEMA = "time timestamp, smoothed_value double"
@@ -132,11 +133,8 @@ def moving_average_smooth(
     from pyspark.sql import Window
 
     bucket_s = resolution_bucket_seconds(start, end, resolution)
-    sliced = (
-        conditions.filter(F.col("timestamp").between(start, end))
-        .filter(F.col("measurement_subject") == subject)
-        .filter(F.col("measurement_of") == of)
-        .filter(F.col("measurement_number").isNotNull())
+    sliced = time_slice(conditions, subject, of, start, end).filter(
+        F.col("measurement_number").isNotNull()
     )
     grid = sliced.groupBy(
         epoch_bucket(F.col("timestamp"), bucket_s).alias("time")
@@ -188,11 +186,8 @@ def lttb_downsample(
     own downsampler). Same execution shape as ``asap_smooth``: filters
     + pre-aggregation stay in codegen, the sequential selection runs
     once per bounded series in Arrow-batched pandas."""
-    sliced = (
-        conditions.filter(F.col("timestamp").between(start, end))
-        .filter(F.col("measurement_subject") == subject)
-        .filter(F.col("measurement_of") == of)
-        .filter(F.col("measurement_number").isNotNull())
+    sliced = time_slice(conditions, subject, of, start, end).filter(
+        F.col("measurement_number").isNotNull()
     )
     pre_bucket = resolution_bucket_seconds(start, end, resolution * 4)
     # grid values rounded to 6dp BEFORE selection: both engines (Spark
@@ -210,11 +205,11 @@ def lttb_downsample(
         )
         return pd.DataFrame({"time": t, "value": v})
 
-    return (
+    return _ordered(
         grid.withColumn("g", F.lit(1))
         .groupBy("g")
-        .applyInPandas(_sample, schema="time timestamp, value double")
-        .orderBy("time")
+        .applyInPandas(_sample, schema="time timestamp, value double"),
+        "time",
     )
 
 
@@ -227,11 +222,8 @@ def asap_smooth(
     resolution: int = 500,
 ) -> DataFrame:
     """→ (time, smoothed_value), ≤ ``resolution`` rows, ordered by time."""
-    sliced = (
-        conditions.filter(F.col("timestamp").between(start, end))
-        .filter(F.col("measurement_subject") == subject)
-        .filter(F.col("measurement_of") == of)
-        .filter(F.col("measurement_number").isNotNull())
+    sliced = time_slice(conditions, subject, of, start, end).filter(
+        F.col("measurement_number").isNotNull()
     )
     # pre-aggregate to a bounded regular grid (resolution×4 buckets) so
     # the pandas stage sees O(resolution) points no matter the raw size
@@ -252,10 +244,10 @@ def asap_smooth(
         )
         return pd.DataFrame({"time": t, "smoothed_value": v})
 
-    return (
+    return _ordered(
         grid.withColumn("g", F.lit(1))
         .groupBy("g")
         .applyInPandas(_smooth, schema=_OUT_SCHEMA)
-        .select("time", F.round("smoothed_value", 6).alias("smoothed_value"))
-        .orderBy("time")
+        .select("time", F.round("smoothed_value", 6).alias("smoothed_value")),
+        "time",
     )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from eventhub_to_timescale_spark.functions.scalars import epoch_bucket
+from eventhub_to_timescale_spark.operators.timeseries import _ordered, time_slice
 
 
 def bucket_gapfill(
@@ -67,12 +68,8 @@ def bucket_gapfill(
         ).alias("time")
     )
     observed = (
-        conditions.filter(
-            (F.col("measurement_subject") == subject)
-            & (F.col("measurement_of") == of)
-            & F.col("timestamp").between(start, end)
-            & F.col("measurement_number").isNotNull()
-        )
+        time_slice(conditions, subject, of, start, end)
+        .filter(F.col("measurement_number").isNotNull())
         .groupBy(
             epoch_bucket(F.col("timestamp"), bucket_seconds).alias("time")
         )
@@ -81,7 +78,7 @@ def bucket_gapfill(
     dense = grid.join(F.broadcast(observed), "time", "left")
 
     if fill is None:
-        return dense.select("time", F.col("obs").alias("value")).orderBy("time")
+        return _ordered(dense.select("time", F.col("obs").alias("value")), "time")
 
     w_back = Window.orderBy("time").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -7,15 +7,18 @@ counterpart, and returns a DataFrame with stable, aliased column names.
 
 Scale design notes (local-test ≠ target: these run against a 100 TB
 time-partitioned table):
-- Each query starts with equality predicates on dimension columns plus
-  a timestamp BETWEEN — expressed FIRST so Catalyst pushes them into
-  the parquet scan as data filters (row-group min/max ≙ its indexes).
-  They do NOT prune date partitions today (no TimescaleDB chunk
-  exclusion yet): the store is partitioned by ``date`` and the
-  predicate is on ``timestamp``, so a 1-day ``aggregated_by_interval``
-  over a ``write_conditions_parquet`` store scans with
-  ``PartitionFilters: []`` and reads every date.  ROADMAP direction 1
-  adds the date predicate.
+- Each query starts with ``time_slice``: equality predicates on
+  dimension columns plus a timestamp BETWEEN — expressed FIRST so
+  Catalyst pushes them into the parquet scan as data filters
+  (row-group min/max ≙ its indexes).  Over the date-partitioned store
+  the slice also bounds the ``date`` partition column, so a 1-day
+  panel reads the two day directories its window touches, not all of
+  them (≙ TimescaleDB chunk exclusion).
+- A panel's result is a chart's worth of rows that the caller collects
+  to the driver, so its final order is sorted in one task
+  (``_ordered``): that skips ``orderBy``'s range-bounds sampling job
+  and range exchange, while every stage below keeps its parallelism.
+  A Q2-style ``orderBy(...).limit(n)`` plans as a top-k and keeps it.
 - Bucketing uses flat epoch-floor arithmetic (one codegen'd column),
   so the groupBy key is a single 8-byte value — map-side partial
   aggregation applies, and the shuffle carries one bucket per
@@ -40,7 +43,7 @@ from eventhub_to_timescale_spark.plans.adaptive import (
 )
 
 
-def _slice(
+def time_slice(
     df: DataFrame,
     subject: str | None,
     of: str | None,
@@ -49,8 +52,19 @@ def _slice(
 ) -> DataFrame:
     """Common dimension + time-range predicate block (every reference
     query's WHERE, e.g. db/get_aggregated_data_by_interval.sql:19-24).
-    Expressed before anything else so it reaches the scan."""
+    Expressed before anything else so it reaches the scan.
+
+    A frame with the store's ``date`` partition column is also cut to
+    ``date BETWEEN to_date(start) AND to_date(end)``, which prunes the
+    day directories outside the window.  The bound is exact because
+    both store writers set ``date = to_date(timestamp)`` in the
+    session zone; both ends are inclusive, since a row at exactly
+    ``end`` belongs to the slice."""
     out = df.filter(F.col("timestamp").between(start, end))
+    if "date" in df.columns:
+        out = out.filter(
+            F.col("date").between(F.to_date(F.lit(start)), F.to_date(F.lit(end)))
+        )
     if subject is not None:
         out = out.filter(F.col("measurement_subject") == subject)
     if of is not None:
@@ -58,10 +72,31 @@ def _slice(
     return out
 
 
+def _ordered(df: DataFrame, *cols) -> DataFrame:
+    """``df`` sorted by ``cols`` in a single task: a panel's final
+    order without ``orderBy``'s sampling job and range exchange."""
+    return df.repartition(1).sortWithinPartitions(*cols)
+
+
 # ---------------------------------------------------------------------------
 # Q1 — tumbling-window average at a fixed interval
 # (reference db/get_aggregated_data_by_interval.sql)
 # ---------------------------------------------------------------------------
+
+
+def _bucket_avg(
+    conditions: DataFrame,
+    subject: str,
+    of: str,
+    start: datetime,
+    end: datetime,
+    interval_seconds: float,
+) -> DataFrame:
+    """Q1's (time, avg_value) buckets, unordered."""
+    sliced = time_slice(conditions, subject, of, start, end)
+    return sliced.groupBy(
+        epoch_bucket(F.col("timestamp"), interval_seconds).alias("time")
+    ).agg(F.avg("measurement_number").alias("avg_value"))
 
 
 def aggregated_by_interval(
@@ -73,13 +108,8 @@ def aggregated_by_interval(
     interval_seconds: float,
 ) -> DataFrame:
     """→ (time, avg_value) per origin-aligned bucket, ordered by time."""
-    sliced = _slice(conditions, subject, of, start, end)
-    return (
-        sliced.groupBy(
-            epoch_bucket(F.col("timestamp"), interval_seconds).alias("time")
-        )
-        .agg(F.avg("measurement_number").alias("avg_value"))
-        .orderBy("time")
+    return _ordered(
+        _bucket_avg(conditions, subject, of, start, end, interval_seconds), "time"
     )
 
 
@@ -97,13 +127,16 @@ def aggregated_data(
     max_result_size: int,
 ) -> DataFrame:
     """Bucket width derived so the span yields ``max_result_size``
-    buckets, then Q1's plan + LIMIT (reference :15, :34)."""
+    buckets, then Q1's plan + LIMIT (reference :15, :34).  The ordered
+    limit plans as one top-k (``TakeOrderedAndProject``)."""
     from eventhub_to_timescale_spark.plans.adaptive import resolution_bucket_seconds
 
     bucket = resolution_bucket_seconds(start, end, max_result_size)
-    return aggregated_by_interval(
-        conditions, subject, of, start, end, bucket
-    ).limit(max_result_size)
+    return (
+        _bucket_avg(conditions, subject, of, start, end, bucket)
+        .orderBy("time")
+        .limit(max_result_size)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -127,13 +160,13 @@ def aggregated_by_day(
     intraday, ``max_value`` multi-day) — mirroring the reference
     function's two RETURN TABLE shapes. Callers spanning both regimes
     must branch on the span the same way ``__spark_entry__`` does."""
-    sliced = _slice(conditions, subject, of, start, end)
+    sliced = time_slice(conditions, subject, of, start, end)
     bucket = daily_branch_bucket_seconds(start, end)
     if bucket is None:
-        return (
+        return _ordered(
             sliced.groupBy(F.date_trunc("day", F.col("timestamp")).alias("time"))
-            .agg(F.max("measurement_number").alias("max_value"))
-            .orderBy("time")
+            .agg(F.max("measurement_number").alias("max_value")),
+            "time",
         )
     day = F.date_trunc("day", F.col("timestamp"))
     sec_of_day = (
@@ -143,10 +176,11 @@ def aggregated_by_day(
         F.unix_micros(day) / F.lit(1_000_000.0)
         + F.floor(sec_of_day / F.lit(bucket)) * F.lit(bucket)
     )
-    return (
-        sliced.groupBy(bucket_start.alias("time"))
-        .agg(F.avg("measurement_number").alias("avg_value"))
-        .orderBy("time")
+    return _ordered(
+        sliced.groupBy(bucket_start.alias("time")).agg(
+            F.avg("measurement_number").alias("avg_value")
+        ),
+        "time",
     )
 
 
@@ -179,7 +213,7 @@ def most_frequent_value(
     below any non-null value so they only win an otherwise-empty
     bucket.
     """
-    sliced = _slice(conditions, subject, of, start, end)
+    sliced = time_slice(conditions, subject, of, start, end)
     n = sliced.count()  # phase 1 (reference :15-23), pre-null-filter
     bucket = adaptive_mode_bucket_seconds(n, start, end)
 
@@ -195,11 +229,11 @@ def most_frequent_value(
         F.desc("cnt"),
         F.asc("measurement_string"),
     )
-    return (
+    return _ordered(
         counted.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("time", F.col("measurement_string").alias("most_common_value"))
-        .orderBy("time")
+        .select("time", F.col("measurement_string").alias("most_common_value")),
+        "time",
     )
 
 
@@ -215,11 +249,11 @@ def unique_subjects(
     start: datetime,
     end: datetime,
 ) -> DataFrame:
-    return (
-        _slice(conditions, None, of, start, end)
+    return _ordered(
+        time_slice(conditions, None, of, start, end)
         .select("measurement_subject")
-        .distinct()
-        .orderBy("measurement_subject")
+        .distinct(),
+        "measurement_subject",
     )
 
 
@@ -228,23 +262,16 @@ def unique_subjects(
 # ---------------------------------------------------------------------------
 
 
-def changed_rows(
+def _changes(
     conditions: DataFrame,
     subject: str | None,
     of: str,
     start: datetime,
     end: datetime,
-    keep_order_col: bool = False,
 ) -> DataFrame:
-    """Keep rows whose ``measurement_string`` differs (null-safely) from
-    the previous row of the same subject (reference LAG :23-26 +
-    IS DISTINCT FROM :33).
-
-    A partition's first row has a NULL ``prev``; ``IS DISTINCT FROM``
-    keeps it unless its own value is also NULL — so a NULL-valued
-    first row is dropped, exactly like the reference (no special
-    first-row escape)."""
-    sliced = _slice(conditions, subject, of, start, end)
+    """Q8's change rows, unordered; with an ``_ord`` tie-break column
+    when the frame has ``measurement_unique_id``."""
+    sliced = time_slice(conditions, subject, of, start, end)
     order_cols = ["timestamp"]
     if "measurement_unique_id" in conditions.columns:
         # deterministic tie-break when several records share a timestamp
@@ -257,7 +284,7 @@ def changed_rows(
         "measurement_of",
         F.col("measurement_string").alias("value"),
     ]
-    if keep_order_col and len(order_cols) > 1:
+    if len(order_cols) > 1:
         # expose the tie-break column so downstream windows (Q9's
         # lead) can order identically when timestamps collide
         keep.append(F.col(order_cols[1]).alias("_ord"))
@@ -265,7 +292,28 @@ def changed_rows(
         sliced.withColumn("prev_value", prev)
         .filter(~F.col("measurement_string").eqNullSafe(F.col("prev_value")))
         .select(*keep)
-        .orderBy("measurement_subject", "timestamp")
+    )
+
+
+def changed_rows(
+    conditions: DataFrame,
+    subject: str | None,
+    of: str,
+    start: datetime,
+    end: datetime,
+) -> DataFrame:
+    """Keep rows whose ``measurement_string`` differs (null-safely) from
+    the previous row of the same subject (reference LAG :23-26 +
+    IS DISTINCT FROM :33), ordered by (subject, timestamp).
+
+    A partition's first row has a NULL ``prev``; ``IS DISTINCT FROM``
+    keeps it unless its own value is also NULL — so a NULL-valued
+    first row is dropped, exactly like the reference (no special
+    first-row escape)."""
+    return _ordered(
+        _changes(conditions, subject, of, start, end).drop("_ord"),
+        "measurement_subject",
+        "timestamp",
     )
 
 
@@ -289,23 +337,24 @@ def state_intervals(
     ``close_at`` (reference uses ``now()`` :36 — parameterized here so
     results are deterministic/testable; None → current_timestamp).
     """
-    changes = changed_rows(conditions, subject, of, start, end, keep_order_col=True)
+    changes = _changes(conditions, subject, of, start, end)
     # order the lead by (timestamp, uid) when available: change rows
     # sharing a timestamp otherwise pair (value, timeEnd)
     # nondeterministically
     order_cols = ["timestamp", "_ord"] if "_ord" in changes.columns else ["timestamp"]
     w = Window.partitionBy("measurement_subject").orderBy(*order_cols)
     close = F.lit(close_at) if close_at is not None else F.current_timestamp()
-    return (
-        changes.withColumn("timeEnd", F.coalesce(F.lead("timestamp").over(w), close))
-        .drop("_ord")
-        .select(
+    return _ordered(
+        changes.withColumn(
+            "timeEnd", F.coalesce(F.lead("timestamp").over(w), close)
+        ).select(
             F.col("timestamp").alias("time"),
             "timeEnd",
             "measurement_subject",
             "value",
-        )
-        .orderBy("measurement_subject", "time")
+        ),
+        "measurement_subject",
+        "time",
     )
 
 
@@ -355,33 +404,18 @@ def _auto_chunk_seconds(
     )
 
 
-def changed_rows_salted(
+def _changes_salted(
     conditions: DataFrame,
     subject: str | None,
     of: str,
     start: datetime,
     end: datetime,
-    chunk_seconds: int | str = "auto",
-    keep_order_col: bool = False,
-    salt_factor: int | None = None,
+    chunk_seconds: int | str,
+    salt_factor: int | None,
 ) -> DataFrame:
-    """``changed_rows`` with the lag window salted by time-chunk.
-    ``chunk_seconds="auto"`` (default, r13 verdict ask #3) sizes the
-    chunk from the measured subject skew — ``_auto_chunk_seconds``;
-    pass ``salt_factor=`` to reuse a precomputed skew factor (skips
-    the CMS probe, only the span aggregate runs — r14 ADVICE #3).
-
-    ``Window.partitionBy(subject)`` concentrates a hot subject's whole
-    history in ONE task, and AQE cannot split a window exchange
-    (measured: its skew handling splits joins, not window exchanges).
-    Rewrite: lag within (subject, chunk) partitions — parallelism =
-    subjects x chunks regardless of key skew — then repair each
-    chunk's first row from a per-chunk summary (one row per non-empty
-    (subject, chunk)): the previous chunk's last value via a window
-    over the TINY summary frame, joined back on (subject, chunk).
-    Semantics are proven identical to ``changed_rows`` in
-    tests/test_queries.py including NULL runs and timestamp ties."""
-    sliced = _slice(conditions, subject, of, start, end)
+    """``_changes`` with the lag window salted by time-chunk (see
+    ``changed_rows_salted``), unordered."""
+    sliced = time_slice(conditions, subject, of, start, end)
     if chunk_seconds == "auto":
         chunk_seconds = _auto_chunk_seconds(
             sliced, start, end, salt_factor=salt_factor
@@ -418,13 +452,46 @@ def changed_rows_salted(
         "measurement_of",
         F.col("measurement_string").alias("value"),
     ]
-    if keep_order_col and len(order_cols) > 1:
+    if len(order_cols) > 1:
         keep.append(F.col(order_cols[1]).alias("_ord"))
     return (
         joined.withColumn("prev_value", prev)
         .filter(~F.col("measurement_string").eqNullSafe(F.col("prev_value")))
         .select(*keep)
-        .orderBy("measurement_subject", "timestamp")
+    )
+
+
+def changed_rows_salted(
+    conditions: DataFrame,
+    subject: str | None,
+    of: str,
+    start: datetime,
+    end: datetime,
+    chunk_seconds: int | str = "auto",
+    salt_factor: int | None = None,
+) -> DataFrame:
+    """``changed_rows`` with the lag window salted by time-chunk.
+    ``chunk_seconds="auto"`` (default, r13 verdict ask #3) sizes the
+    chunk from the measured subject skew — ``_auto_chunk_seconds``;
+    pass ``salt_factor=`` to reuse a precomputed skew factor (skips
+    the CMS probe, only the span aggregate runs — r14 ADVICE #3).
+
+    ``Window.partitionBy(subject)`` concentrates a hot subject's whole
+    history in ONE task, and AQE cannot split a window exchange
+    (measured: its skew handling splits joins, not window exchanges).
+    Rewrite: lag within (subject, chunk) partitions — parallelism =
+    subjects x chunks regardless of key skew — then repair each
+    chunk's first row from a per-chunk summary (one row per non-empty
+    (subject, chunk)): the previous chunk's last value via a window
+    over the TINY summary frame, joined back on (subject, chunk).
+    Semantics are proven identical to ``changed_rows`` in
+    tests/test_queries.py including NULL runs and timestamp ties."""
+    return _ordered(
+        _changes_salted(
+            conditions, subject, of, start, end, chunk_seconds, salt_factor
+        ).drop("_ord"),
+        "measurement_subject",
+        "timestamp",
     )
 
 
@@ -447,19 +514,13 @@ def state_intervals_salted(
     ``salt_factor=`` reuses a precomputed skew factor (r14 ADVICE #3)."""
     if chunk_seconds == "auto":
         chunk_seconds = _auto_chunk_seconds(
-            _slice(conditions, subject, of, start, end),
+            time_slice(conditions, subject, of, start, end),
             start,
             end,
             salt_factor=salt_factor,
         )
-    changes = changed_rows_salted(
-        conditions,
-        subject,
-        of,
-        start,
-        end,
-        chunk_seconds=chunk_seconds,
-        keep_order_col=True,
+    changes = _changes_salted(
+        conditions, subject, of, start, end, chunk_seconds, salt_factor
     )
     order_cols = ["timestamp", "_ord"] if "_ord" in changes.columns else [
         "timestamp"
@@ -481,16 +542,16 @@ def state_intervals_salted(
     )
     joined = df.join(boundary, ["measurement_subject", "_chunk"], "left")
     close = F.lit(close_at) if close_at is not None else F.current_timestamp()
-    return (
+    return _ordered(
         joined.withColumn(
             "timeEnd",
             F.coalesce(F.col("_next_in"), F.col("_next_chunk_first"), close),
-        )
-        .select(
+        ).select(
             F.col("timestamp").alias("time"),
             "timeEnd",
             "measurement_subject",
             "value",
-        )
-        .orderBy("measurement_subject", "time")
+        ),
+        "measurement_subject",
+        "time",
     )

@@ -403,7 +403,7 @@ def test_salted_auto_chunk_responds_to_measured_skew(spark):
 
     from eventhub_to_timescale_spark.operators.timeseries import (
         _auto_chunk_seconds,
-        _slice,
+        time_slice,
         changed_rows,
         changed_rows_salted,
         state_intervals,
@@ -439,11 +439,11 @@ def test_salted_auto_chunk_responds_to_measured_skew(spark):
     # partitions, where a 600-row slice's fair share is so large no
     # key trips the ratio — the cluster-shaped question is 32 tasks
     auto_skew = _auto_chunk_seconds(
-        _slice(skewed, None, "state", start, end), start, end,
+        time_slice(skewed, None, "state", start, end), start, end,
         parallelism=32,
     )
     auto_flat = _auto_chunk_seconds(
-        _slice(balanced, None, "state", start, end), start, end,
+        time_slice(balanced, None, "state", start, end), start, end,
         parallelism=32,
     )
     # widths come from the OBSERVED data span (r14 review fix: a wide
@@ -456,7 +456,7 @@ def test_salted_auto_chunk_responds_to_measured_skew(spark):
     # data probed through a 5x wider query window must still split
     wide_end = datetime(2024, 3, 1, 5)
     auto_wide = _auto_chunk_seconds(
-        _slice(skewed, None, "state", start, wide_end), start, wide_end,
+        time_slice(skewed, None, "state", start, wide_end), start, wide_end,
         parallelism=32,
     )
     assert auto_wide == auto_skew, "query width leaked into the chunk"
